@@ -1437,28 +1437,25 @@ object LlmPipeline extends QueryPack {
         pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))))
     }
 
-  /** The shuffle-free ADC + exact-rerank tail shared by q_sim_ann_ivfpq
-    * and its ingest delta: the WIDE per-query distance table
-    * ([[pqDtableWidePlan]]) hash-joins once by qid onto UNEXPANDED
-    * candidate (qid, nid) rows; the approximate distance is then M
-    * constant-index array lookups summed as a column expression — never
-    * an aggregation, never a per-subspace join (the r21 restructure: the
-    * M-level (qid, nibble) join fold paid M broadcast builds + M
-    * hash-probe passes per execution; the one-join form computes the
-    * SAME sd_0+…+sd_{M−1} doubles in one codegen stage. The
+  /** Per-batch ADC distance table, pivoted WIDE and size-gated
+    * ([[maybeBroadcastDtable]]) on the caller's row estimate. */
+  private def pqBatchDtable(s: SparkSession, d: String, e: DataFrame,
+      estRows: Long): DataFrame =
+    maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(e,
+      pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid")))), estRows)
+
+  /** The shuffle-free ADC shortlist of the PQ tiers: the WIDE per-query
+    * distance table ([[pqDtableWidePlan]]) hash-joins once by qid onto
+    * UNEXPANDED candidate (qid, nid) rows; the approximate distance is
+    * then M constant-index array lookups summed as a column expression —
+    * never an aggregation, never a per-subspace join (the r21
+    * restructure: the M-level (qid, nibble) join fold paid M broadcast
+    * builds + M hash-probe passes per execution; the one-join form
+    * computes the SAME sd_0+…+sd_{M−1} doubles in one codegen stage. The
     * exploded-candidate shuffle-agg form measured 1.9 s vs 1.4 s at
     * sf0.1; naive per-candidate vector math was 14× worse again). Only
-    * the ADC shortlist touches full-precision vectors for the rerank. */
-  private def pqAdcRerank(s: SparkSession, d: String,
-      cands: DataFrame, codesWide: DataFrame, dtableWide: DataFrame): DataFrame = {
-    val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    pqAdcRerank(cands, codesWide, dtableWide, e, e)
-  }
-
-  /** [[pqAdcRerank]] with explicit query-side / neighbor-side vector
-    * frames — the ingest facade ranks an EXTERNAL batch (vectors not in
-    * the stored table) against the persisted corpus index, so the exact
-    * rerank's qid lookups must hit the batch frame, not the table. */
+    * the ADC shortlist touches full-precision vectors, in
+    * [[annExactTop3]]. */
   private def pqAdcRerank(cands: DataFrame, codesWide: DataFrame,
       dtableWide: DataFrame, qVecs: DataFrame, nVecs: DataFrame): DataFrame = {
     // codes are 1-based (row_number seeds), so subspace m's lookup slot
@@ -1474,18 +1471,7 @@ object LlmPipeline extends QueryPack {
         keyNames = Seq("qid"), orderBy = Seq("adist" -> true, "nid" -> true),
         k = PQ_RERANK, rankName = "arnk")
       .select("qid", "nid")
-    val pairs = shortlist
-      .join(maybeBroadcast(qVecs.select(col("vec_id"), col("embedding")).as("ea")),
-        col("qid") === col("ea.vec_id"))
-      .join(maybeBroadcast(nVecs.select(col("vec_id"), col("embedding")).as("eb")),
-        col("nid") === col("eb.vec_id"))
-      .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-        r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-    org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-        keyNames = Seq("vec_id"),
-        orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-        k = 3, rankName = "rnk")
-      .orderBy("vec_id", "rnk")
+    annExactTop3(shortlist, qVecs, nVecs)
   }
 
   /** Window width (tokens) for substring-level dedup: a token position is
@@ -1943,9 +1929,10 @@ object LlmPipeline extends QueryPack {
     semanticVerdicts(s, d, b, corpus).orderBy("vec_id")
   }
 
-  /** Shared exact-cosine top-3 tail of the ANN ingest facades: candidate
-    * (qid, nid) pairs look up query vectors in the BATCH frame and
-    * neighbor vectors in the corpus. */
+  /** The exact-cosine top-3 rerank every ANN tier ends in: candidate
+    * (qid, nid) pairs look up query vectors in `qVecs` and neighbor
+    * vectors in `nVecs` (the same table for the registered faces; the
+    * caller's batch and the standing corpus for the ingest facades). */
   private def annExactTop3(cands: DataFrame, qVecs: DataFrame,
       nVecs: DataFrame): DataFrame = {
     val pairs = cands
@@ -1962,126 +1949,134 @@ object LlmPipeline extends QueryPack {
       .orderBy("vec_id", "rnk")
   }
 
-  /** Corpus-side embeddings (incl. committed overlay rows) excluding the
-    * batch's ids. */
-  private def corpusVecsExcl(s: SparkSession, d: String, batch: DataFrame): DataFrame =
-    visibleVecs(s, d).join(batch.select("vec_id"), Seq("vec_id"), "left_anti")
-
-  /** LSH-multiprobe ANN ingest: batch bucket rows computed fresh, corpus
-    * side from the persisted multi-table bucket index. */
-  private[graft] def ingestAnnLsh(s: SparkSession, d: String,
-      batch: DataFrame): DataFrame = {
-    val b = batch.select(col("vec_id"), col("embedding"))
-    val corpus = stdLshMulti(s, d)
-      .join(b.select("vec_id"), Seq("vec_id"), "left_anti")
-    val cands = lshMultiBucketsPlan(b).as("ba")
-      .join(maybeBroadcast(corpus.as("bb")), col("ba.tb") === col("bb.tb") &&
-        col("ba.bucket") === col("bb.bucket"))
-      .select(col("ba.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    annExactTop3(cands, b, corpusVecsExcl(s, d, batch))
+  /** The narrow (qid, nid) candidate join of every ANN tier: probe rows
+    * meet the broadcast-gated postings on `keys` (probe column → postings
+    * column). Wide vectors never ride it — they join back per surviving
+    * candidate in [[annExactTop3]]. `excludeSelf` drops self-pairs when
+    * the probing vectors are the indexed corpus itself. */
+  private def annCands(probes: DataFrame, postings: DataFrame,
+      keys: Seq[(String, String)], excludeSelf: Boolean): DataFrame = {
+    val on = keys.map { case (p, q) => col(s"a.$p") === col(s"b.$q") } ++
+      (if (excludeSelf) Seq(col("a.vec_id") =!= col("b.vec_id")) else Nil)
+    probes.as("a").join(maybeBroadcast(postings.as("b")), on.reduce(_ && _))
+      .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
   }
 
-  /** Constant-occupancy LSH ANN ingest (the LSH-family scale pick):
-    * batch buckets + targeted probes computed fresh under the FROZEN
-    * geometry (nbits from the persisted corpus count); candidates from
-    * the persisted own-bucket index. O(batch·tables·probes·c). */
-  private[graft] def ingestAnnLshc(s: SparkSession, d: String,
-      batch: DataFrame): DataFrame = {
-    val b = batch.select(col("vec_id"), col("embedding"))
-    val nbits = lshcNbits(embCount(s, d))
-    val probes = lshcProbesPlan(b, nbits)
-      // tail inherits qid partitioning; count pinned vs AQE coalesce
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id"))
-    val corpus = stdLshcOwn(s, d, nbits)
-      .join(b.select("vec_id"), Seq("vec_id"), "left_anti")
-    val cands = probes.as("pa")
-      .join(maybeBroadcast(corpus.as("pb")), col("pa.tb") === col("pb.tb") &&
-        col("pa.bucket") === col("pb.bucket"))
-      .select(col("pa.vec_id").as("qid"), col("pb.vec_id").as("nid"))
-      .distinct()
-    annExactTop3(cands, b, corpusVecsExcl(s, d, batch))
+  /** The three faces of an ANN tier: the corpus-wide registered query,
+    * its registered `_delta` twin (batch = `vec_id % 10 = 7`), and the
+    * [[graft.Ingest]] facade over a caller's batch. */
+  private object AnnFace extends Enumeration { val Registry, Delta, Facade = Value }
+
+  /** One ANN tier, stated once; [[annRegistry]], [[annDelta]] and
+    * [[annFacade]] derive its faces. `probes` is the persisted corpus-wide
+    * probe list and `probesFor` the same probe plan over any vector set
+    * (identical expressions, so a batch probes exactly as the corpus
+    * build did). `postings` is the base postings artifact and
+    * `stdPostings` its overlay-aware standing view, joined on `keys`.
+    * `pq` ranks candidates by PQ-ADC before the exact rerank. `spread`
+    * names the faces whose probe rows take the [[spread]] exchange. */
+  private case class AnnTier(
+      probes: (SparkSession, String) => DataFrame,
+      probesFor: (SparkSession, String, DataFrame) => DataFrame,
+      postings: (SparkSession, String) => DataFrame,
+      stdPostings: (SparkSession, String) => DataFrame,
+      keys: Seq[String], pq: Boolean, spread: Set[AnnFace.Value])
+
+  /** Candidates → (PQ-ADC shortlist →) exact rerank for one face. The
+    * faces differ only in the probing vectors, how the corpus side
+    * excludes them, and where the rerank reads vectors; `codes` and
+    * `dtable` are evaluated by PQ tiers only. A PQ tier builds its
+    * distance table (training the codebooks on a cold store) BEFORE its
+    * probe and postings artifacts: concurrent cold callers (the other
+    * tiers, semantic dedup) then build different artifacts at once
+    * instead of racing to build the shared quantizer twice. */
+  private def annSearch(tier: AnnTier, face: AnnFace.Value, probes: => DataFrame,
+      postings: => DataFrame, qVecs: DataFrame, nVecs: DataFrame,
+      codes: => DataFrame, dtable: => DataFrame): DataFrame = {
+    val rerank: DataFrame => DataFrame =
+      if (tier.pq) { val dt = dtable; pqAdcRerank(_, codes, dt, qVecs, nVecs) }
+      else annExactTop3(_, qVecs, nVecs)
+    rerank(annCands(if (tier.spread(face)) spread(probes) else probes,
+      postings, tier.keys.map(k => k -> k),
+      excludeSelf = face == AnnFace.Registry).distinct())
   }
 
-  /** Trained-k IVF ANN ingest: batch probe cells ranked fresh against
-    * the frozen centroid artifact; candidates from the persisted top-2
-    * corpus assignment. */
-  private[graft] def ingestAnnIvfK(s: SparkSession, d: String,
-      batch: DataFrame): DataFrame = {
-    val b = batch.select(col("vec_id"), col("embedding"))
-    val cents = ivfKCentroids(s, d)
-    val np = 2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt
-    val cands = ivfKCellsFor(b, cents, np).as("a")
-      .join(maybeBroadcast(stdIvfkAssign2(s, d)
-          .join(b.select("vec_id"), Seq("vec_id"), "left_anti").as("bb")),
-        col("a.cell") === col("bb.cell"))
-      .select(col("a.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    annExactTop3(cands, b, corpusVecsExcl(s, d, batch))
+  private def annRegistry(tier: AnnTier): Fn = (s, d) => {
+    val e = t(s, d, "embeddings")
+    annSearch(tier, AnnFace.Registry, tier.probes(s, d), tier.postings(s, d),
+      e, e, pqCodesWide(s, d), pqCorpusDtable(s, d))
   }
 
-  /** Constant-cell IVF ANN ingest (the 100 TB scale pick): batch probes
-    * fresh against the frozen coarse+fine centroids; candidates from the
-    * persisted top-2 assignment. O(batch·NP·c), N-independent dials. */
-  private[graft] def ingestAnnIvfc(s: SparkSession, d: String,
-      batch: DataFrame): DataFrame = {
-    val b = batch.select(col("vec_id"), col("embedding"))
-    val cands = ivfcProbesFor(s, d, b).as("a")
-      .join(maybeBroadcast(
-          stdSemAssign2(s, d).select(col("vec_id"), col("cell"))
-          .join(b.select("vec_id"), Seq("vec_id"), "left_anti").as("bb")),
-        col("a.cell") === col("bb.cell"))
-      .select(col("a.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    annExactTop3(cands, b, corpusVecsExcl(s, d, batch))
+  private def annDelta(tier: AnnTier): Fn = (s, d) => {
+    val isBatch = col("vec_id") % 10 === 7
+    val e = t(s, d, "embeddings")
+    annSearch(tier, AnnFace.Delta, tier.probesFor(s, d, e.where(isBatch)),
+      tier.postings(s, d).where(!isBatch), e, e,
+      pqCodesWide(s, d).where(!(col("nid") % 10 === 7)),
+      // size-gated on the EXACT fixture batch size from the persisted
+      // corpus count (see maybeBroadcastDtable)
+      pqBatchDtable(s, d, e.where(isBatch), embCount(s, d) / 10 + 1))
   }
 
-  /** Trained-k IVF-PQ ANN ingest: batch computes its own probe list and
-    * ADC distance table (O(batch·M·K) scalars) against the FROZEN
-    * codebooks; candidates + nibble codes from the persisted artifacts;
-    * corpus vectors touched only for the ADC-shortlist rerank. */
-  private[graft] def ingestAnnIvfPq(s: SparkSession, d: String,
+  private def annFacade(tier: AnnTier)(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val b = batch.select(col("vec_id"), col("embedding"))
-    val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
-    val cents = ivfKCentroids(s, d)
-    val np = 2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt
-    val cands = ivfKCellsFor(b, cents, np).as("a")
-      .join(maybeBroadcast(stdIvfkAssign2(s, d)
-          .join(b.select("vec_id"), Seq("vec_id"), "left_anti").as("bb")),
-        col("a.cell") === col("bb.cell"))
-      .select(col("a.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    pqAdcRerank(cands,
-      stdPqCodesWide(s, d)
-        .join(b.select(col("vec_id").as("nid")), Seq("nid"), "left_anti"),
-      // size-gated (ADVICE r14): an arbitrary facade batch can exceed the
-      // broadcast budget -- oversized tables degrade to shuffled folds
-      maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(b, cb)), estBatchRows(b)),
-      b, corpusVecsExcl(s, d, batch))
+    val ids = b.select("vec_id")
+    annSearch(tier, AnnFace.Facade, tier.probesFor(s, d, b),
+      tier.stdPostings(s, d).join(ids, Seq("vec_id"), "left_anti"),
+      b, visibleVecs(s, d).join(ids, Seq("vec_id"), "left_anti"),
+      stdPqCodesWide(s, d).join(b.select(col("vec_id").as("nid")), Seq("nid"), "left_anti"),
+      // an arbitrary facade batch can exceed the broadcast budget:
+      // oversized tables degrade to shuffled joins
+      pqBatchDtable(s, d, b, estBatchRows(b)))
   }
 
-  /** Constant-cell IVF-PQ ANN ingest — the linear-class PQ tier's
-    * per-ingest face for an arbitrary batch. */
-  private[graft] def ingestAnnIvfcPq(s: SparkSession, d: String,
-      batch: DataFrame): DataFrame = {
-    val b = batch.select(col("vec_id"), col("embedding"))
-    val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
-    val cands = ivfcProbesFor(s, d, b).as("a")
-      .join(maybeBroadcast(
-          stdSemAssign2(s, d).select(col("vec_id"), col("cell"))
-          .join(b.select("vec_id"), Seq("vec_id"), "left_anti").as("bb")),
-        col("a.cell") === col("bb.cell"))
-      .select(col("a.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    pqAdcRerank(cands,
-      stdPqCodesWide(s, d)
-        .join(b.select(col("vec_id").as("nid")), Seq("nid"), "left_anti"),
-      // size-gated (ADVICE r14): an arbitrary facade batch can exceed the
-      // broadcast budget -- oversized tables degrade to shuffled folds
-      maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(b, cb)), estBatchRows(b)),
-      b, corpusVecsExcl(s, d, batch))
-  }
+  /** Multi-table LSH (dial tier; [[lshcTier]] is the LSH scale pick). */
+  private val lshTier = AnnTier(lshMultiBuckets, (_, _, e) => lshMultiBucketsPlan(e),
+    lshMultiBuckets, stdLshMulti, Seq("tb", "bucket"), pq = false,
+    spread = Set(AnnFace.Registry, AnnFace.Delta))
+
+  /** Constant-occupancy LSH: probes and own-bucket postings under the
+    * FROZEN geometry (nbits from the persisted corpus count). */
+  private val lshcTier = AnnTier(lshcProbes,
+    (s, d, e) => lshcProbesPlan(e, lshcNbits(embCount(s, d))),
+    (s, d) => lshcProbes(s, d).where(col("own"))
+      .select(col("vec_id"), col("tb"), col("bucket")),
+    (s, d) => stdLshcOwn(s, d, lshcNbits(embCount(s, d))),
+    Seq("tb", "bucket"), pq = false, spread = AnnFace.values)
+
+  /** Trained-k IVF: probe cells ranked against the frozen centroids
+    * (np = 2⌈√k⌉), postings the top-2 corpus assignment. */
+  private val ivfKTier = AnnTier(ivfKProbes,
+    (s, d, e) => ivfKCellsFor(e, ivfKCentroids(s, d),
+      2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt),
+    ivfKAssign2, stdIvfkAssign2, Seq("cell"), pq = false,
+    spread = Set(AnnFace.Registry))
+
+  /** Constant-cell IVF (the 100 TB scale pick): probes against the
+    * frozen two-level quantizer, postings its top-2 corpus assignment. */
+  private val ivfcTier = AnnTier(ivfcProbes, ivfcProbesFor,
+    (s, d) => semAssign2(s, d).select(col("vec_id"), col("cell")),
+    (s, d) => stdSemAssign2(s, d).select(col("vec_id"), col("cell")),
+    Seq("cell"), pq = false, spread = Set.empty)
+
+  private val ivfPqTier = ivfKTier.copy(pq = true,
+    spread = Set(AnnFace.Registry, AnnFace.Delta))
+  private val ivfcPqTier = ivfcTier.copy(pq = true,
+    spread = Set(AnnFace.Registry, AnnFace.Delta))
+
+  private[graft] def ingestAnnLsh(s: SparkSession, d: String, batch: DataFrame): DataFrame =
+    annFacade(lshTier)(s, d, batch)
+  private[graft] def ingestAnnLshc(s: SparkSession, d: String, batch: DataFrame): DataFrame =
+    annFacade(lshcTier)(s, d, batch)
+  private[graft] def ingestAnnIvfK(s: SparkSession, d: String, batch: DataFrame): DataFrame =
+    annFacade(ivfKTier)(s, d, batch)
+  private[graft] def ingestAnnIvfc(s: SparkSession, d: String, batch: DataFrame): DataFrame =
+    annFacade(ivfcTier)(s, d, batch)
+  private[graft] def ingestAnnIvfPq(s: SparkSession, d: String, batch: DataFrame): DataFrame =
+    annFacade(ivfPqTier)(s, d, batch)
+  private[graft] def ingestAnnIvfcPq(s: SparkSession, d: String, batch: DataFrame): DataFrame =
+    annFacade(ivfcPqTier)(s, d, batch)
 
   /** Overlay rows a DOC commit appends per index family
     * ([[graft.Ingest.commitDocs]]): each frame is the batch's rows under
@@ -3638,53 +3633,18 @@ object LlmPipeline extends QueryPack {
       val masks = lit(0L) +: (0 until LSH_PLANES).map(p => lit(1L << p))
       val probes = b.select(col("vec_id"),
         explode(array(masks.map(m => col("bucket").bitwiseXOR(m)): _*)).as("pbucket"))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(b.as("b")), col("a.pbucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val e = t(s, d, "embeddings")
+      annExactTop3(annCands(probes, b, Seq("pbucket" -> "bucket"), excludeSelf = true), e, e)
     }),
 
     // Multi-table LSH: LSH_TABLES independent tables of LSH_TABLE_BITS
     // sign bits each, candidates OR'd across tables — the standard fix
     // for single-table LSH's recall collapse (a true neighbor only needs
-    // to collide in ONE table; P(hit) = 1−(1−p^bits)^tables). Candidate
-    // generation stays narrow-id-only: the self-join emits (query,
-    // neighbor) id pairs, the cross-table OR is one DISTINCT on those
-    // 16-byte rows, and embeddings join back ONLY for surviving
-    // candidates — at 100 TB the wide vectors never ride through the
-    // bucket join or the dedup shuffle.
-    "q_sim_ann_lsh_multi" -> ((s, d) => {
-      val b = lshMultiBuckets(s, d)
-      // one narrow exchange parallelizes the bucket join (see spread)
-      val cands = spread(b).as("ba")
-        .join(maybeBroadcast(b.as("bb")), col("ba.tb") === col("bb.tb") &&
-          col("ba.bucket") === col("bb.bucket") &&
-          col("ba.vec_id") =!= col("bb.vec_id"))
-        .select(col("ba.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(e.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
-    }),
+    // to collide in ONE table; P(hit) = 1−(1−p^bits)^tables). The
+    // cross-table OR is one DISTINCT on the 16-byte (qid, nid) rows, so at
+    // 100 TB the wide vectors never ride the bucket join or the dedup
+    // shuffle.
+    "q_sim_ann_lsh_multi" -> annRegistry(lshTier),
 
     // Multi-table LSH WITH bit-flip multiprobe — the canonical
     // production LSH composition (FAISS/E2LSH "multiprobe" over L
@@ -3705,23 +3665,9 @@ object LlmPipeline extends QueryPack {
       // join + DISTINCT + rerank all run under the pinned layout
       val probes = spread(b).select(col("vec_id"), col("tb"),
         explode(array(masks.map(m => col("bucket").bitwiseXOR(m)): _*)).as("pbucket"))
-      val cands = probes.as("pa")
-        .join(maybeBroadcast(b.as("pb")), col("pa.tb") === col("pb.tb") &&
-          col("pa.pbucket") === col("pb.bucket") &&
-          col("pa.vec_id") =!= col("pb.vec_id"))
-        .select(col("pa.vec_id").as("qid"), col("pb.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(e.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val e = t(s, d, "embeddings")
+      annExactTop3(annCands(probes, b, Seq("tb" -> "tb", "pbucket" -> "bucket"),
+        excludeSelf = true).distinct(), e, e)
     }),
 
     // Vector-ingest delta — completes the per-ingest trilogy (exact hash
@@ -3730,29 +3676,8 @@ object LlmPipeline extends QueryPack {
     // top-3 corpus neighbors by bucketing FRESH against the same
     // deterministic hyperplanes and probing the PERSISTED multi-table
     // LSH index for the standing corpus. Per ingest: O(batch buckets +
-    // collisions); the corpus is touched only through its narrow on-disk
-    // (vec_id, tb, bucket) index plus per-candidate vector lookups.
-    "q_sim_ann_lsh_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
-      val corpus = lshMultiBuckets(s, d).where(!isBatch)
-      val batch = spread(lshMultiBucketsPlan(t(s, d, "embeddings").where(isBatch)))
-      val cands = batch.as("ba")
-        .join(maybeBroadcast(corpus.as("bb")), col("ba.tb") === col("bb.tb") &&
-          col("ba.bucket") === col("bb.bucket"))
-        .select(col("ba.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(e.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
-    }),
+    // collisions).
+    "q_sim_ann_lsh_delta" -> annDelta(lshTier),
 
     // Constant-occupancy LSH — the linear-class re-dial of the LSH
     // family (the LSHC_* scaladoc carries the design): per-table bit
@@ -3762,42 +3687,10 @@ object LlmPipeline extends QueryPack {
     // smallest pair — constant 1+T+1 lookups/table, never the
     // nbits-growing hamming-1 ball). Candidate volume O(N·tables·probes·c)
     // with every dial N-independent — the linear class the fixed-bucket
-    // q_sim_ann_lsh_mp (N²/B) cannot reach. Candidates stay narrow
-    // id-pairs; wide vectors join back only for the surviving rerank.
-    "q_sim_ann_lshc" -> ((s, d) => {
-      val art = lshcProbes(s, d)
-      // ONE narrow exchange of the probe rows (N·tables·probes ids) by
-      // query id, which the whole tail then inherits alias-aware: the
-      // candidate broadcast join preserves it, so the (qid, nid)
-      // DISTINCT and the TopK heaps both run in-stage — without it they
-      // each re-shuffled the full candidate set (22 MB at sf0.1; the
-      // probe rows are ~2 MB). Same partitioning-reuse shape that keeps
-      // q_sim_ann_ivfc's tail exchange-free off its cached probe build.
-      // The partition count is PINNED (user-specified counts are exempt
-      // from AQE coalescing): the exchange is small but everything heavy
-      // hangs below it, and AQE's size-based coalesce would fold the
-      // 2 MB of probe ids into one partition and single-thread the
-      // 6M-row candidate join + rerank (measured 3.1 -> 5.7 s at sf0.1).
-      val pr = spread(art)
-      val idx = art.where(col("own")).select(col("vec_id"), col("tb"), col("bucket"))
-      val cands = pr.as("pa")
-        .join(maybeBroadcast(idx.as("pb")), col("pa.tb") === col("pb.tb") &&
-          col("pa.bucket") === col("pb.bucket") &&
-          col("pa.vec_id") =!= col("pb.vec_id"))
-        .select(col("pa.vec_id").as("qid"), col("pb.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(e.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
-    }),
+    // q_sim_ann_lsh_mp (N²/B) cannot reach. Without the spread exchange
+    // the DISTINCT and the TopK heaps each re-shuffled the full candidate
+    // set (22 MB at sf0.1; the probe rows are ~2 MB).
+    "q_sim_ann_lshc" -> annRegistry(lshcTier),
 
     // Constant-occupancy LSH candidate-volume report — the saturation
     // evidence as data (the q_dedup_semantic_cells convention): the
@@ -3832,38 +3725,11 @@ object LlmPipeline extends QueryPack {
             .as("saturated"))
     }),
 
-    // Constant-occupancy LSH ingest delta — the per-ingest face: a new
-    // embedding batch (vec_id%10=7) computes its buckets + targeted
-    // probes FRESH under the FROZEN geometry (nbits from the persisted
-    // corpus count — identical projection, so batch rows ≡ the corpus
-    // artifact restricted to batch ids) and meets only the persisted
-    // own-bucket index of the standing corpus: O(batch·tables·probes·c)
-    // per ingest, the corpus never re-bucketed.
-    "q_sim_ann_lshc_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
-      val e = t(s, d, "embeddings")
-      // tail inherits qid partitioning; count pinned vs AQE coalesce
-      // (see q_sim_ann_lshc)
-      val probes = spread(lshcProbesPlan(e.where(isBatch), lshcNbits(embCount(s, d))))
-      val corpus = lshcProbes(s, d).where(col("own") && !isBatch)
-        .select(col("vec_id"), col("tb"), col("bucket"))
-      val cands = probes.as("pa")
-        .join(maybeBroadcast(corpus.as("pb")), col("pa.tb") === col("pb.tb") &&
-          col("pa.bucket") === col("pb.bucket"))
-        .select(col("pa.vec_id").as("qid"), col("pb.vec_id").as("nid"))
-        .distinct()
-      val ev = e.select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(ev.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(ev.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
-    }),
+    // Constant-occupancy LSH ingest delta: a new embedding batch
+    // (vec_id%10=7) probes under the FROZEN geometry and meets only the
+    // persisted own-bucket index — O(batch·tables·probes·c) per ingest,
+    // the corpus never re-bucketed.
+    "q_sim_ann_lshc_delta" -> annDelta(lshcTier),
 
     // True IVF ANN: train a coarse quantizer (centroid per label cell,
     // dimension-wise mean via exact decimal sums — deterministic under any
@@ -3872,8 +3738,8 @@ object LlmPipeline extends QueryPack {
     // assigned cell. Completes the IVF/LSH pair of ANN scale paths: at
     // 100 TB the quantizer trains on a sample, centroids broadcast
     // (here 10×64 doubles), assignment is a narrow map, and the pair join
-    // touches one cell per query vector. Both top-k steps run through the
-    // custom TopKPerKey plan.
+    // touches one cell per query vector. Its output carries the cell, so
+    // it keeps its own rerank tail.
     "q_baseline_ann_ivf" -> ((s, d) => {
       // probe within the assigned (rank-1) cell only. Candidate
       // generation is narrow-id-only off the persisted assignment index:
@@ -3911,148 +3777,42 @@ object LlmPipeline extends QueryPack {
     // distinct by construction and the database side appears in exactly
     // one cell, so no DISTINCT pass is needed.
     "q_sim_ann_ivf_mp" -> ((s, d) => {
-      // probe side reads the top-NPROBE probe-list index, database side
-      // the rank-1 assignment index; candidates are id-only and vectors
-      // join back per candidate (see q_baseline_ann_ivf)
-      val probes = spread(ivfProbes(s, d))
-      val assigned = ivfAssign(s, d)
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val e = t(s, d, "embeddings")
+      annExactTop3(annCands(spread(ivfProbes(s, d)), ivfAssign(s, d),
+        Seq("cell" -> "cell"), excludeSelf = true), e, e)
     }),
 
     // Trained-k IVF: both dials data-bound — k = ⌈√N⌉ cells trained from
-    // a deterministic md5-bucket seed sample + one Lloyd step, ⌈√k⌉
-    // probes per query (see ivfKCentroids). Candidate/rerank shape is
-    // identical to q_sim_ann_ivf_mp; only the quantizer differs. Measured
-    // recall@3 vs exhaustive at sf0.001: 0.579, vs 0.247 (label-cell ivf)
-    // and 0.549 (label-cell multi-probe) — finer, geometry-trained cells
-    // buy more recall per probed row (tracked per-round in RECALL.json).
-    "q_sim_ann_ivf_k" -> ((s, d) => {
-      val probes = spread(ivfKProbes(s, d))
-      val assigned = ivfKAssign2(s, d)
-      // distinct: a top-2-assigned neighbor can match two probe cells of
-      // the same query — dedup the id-pairs BEFORE touching wide vectors
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
-    }),
+    // a deterministic md5-bucket seed sample + one Lloyd step, 2⌈√k⌉
+    // probes per query (see ivfKCentroids). Measured recall@3 vs
+    // exhaustive at sf0.001: 0.579, vs 0.247 (label-cell ivf) and 0.549
+    // (label-cell multi-probe) — finer, geometry-trained cells buy more
+    // recall per probed row (tracked per-round in RECALL.json). The
+    // DISTINCT drops a top-2-assigned neighbor matching two probe cells
+    // of the same query before any wide vector is touched.
+    "q_sim_ann_ivf_k" -> annRegistry(ivfKTier),
 
     // Constant-cell IVF — the 100 TB re-dialing of q_sim_ann_ivf_k,
     // reusing the semantic family's PERSISTED two-level k = N/c quantizer
     // (coarse+fine centroids, top-2 corpus assignment) as the search
-    // index: probes are the top-NP fine cells across the query's top-2
+    // index: probes are the top-NP fine cells across the query's top
     // coarse groups, NP and cell size c both N-INDEPENDENT constants, so
     // candidate volume is O(N·NP·c) — the linear class in the
     // SCALING_r11 shuffle audit, vs N^1.75 for the √N-dial family.
-    // Candidate/rerank tail identical to q_sim_ann_ivf_k.
-    "q_sim_ann_ivfc" -> ((s, d) => {
-      val probes = ivfcProbes(s, d)
-      val assigned = semAssign2(s, d).select(col("vec_id"), col("cell"))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
-    }),
+    "q_sim_ann_ivfc" -> annRegistry(ivfcTier),
 
-    // Constant-cell IVF ingest delta — the per-ingest face of
-    // q_sim_ann_ivfc, completing its lifecycle: a new embedding batch
-    // (vec_id%10=7) ranks its probe cells FRESH against the frozen
-    // coarse+fine centroid artifacts (identical scoring chain, so batch
-    // probes ≡ the corpus probe list restricted to batch ids) and meets
-    // only the PERSISTED top-2 corpus assignment — O(batch·NP·c) work
-    // per ingest, N-independent dials, the corpus never rescored.
-    "q_sim_ann_ivfc_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
-      val e = t(s, d, "embeddings")
-      val probes = ivfcProbesFor(s, d, e.where(isBatch))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(semAssign2(s, d).where(!isBatch)
-            .select(col("vec_id"), col("cell")).as("b")),
-          col("a.cell") === col("b.cell"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val ev = e.select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(ev.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(ev.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
-    }),
+    // Constant-cell IVF ingest delta: a new embedding batch (vec_id%10=7)
+    // ranks its probe cells FRESH against the frozen coarse+fine
+    // centroids and meets only the PERSISTED top-2 corpus assignment —
+    // O(batch·NP·c) work per ingest, the corpus never rescored.
+    "q_sim_ann_ivfc_delta" -> annDelta(ivfcTier),
 
     // Trained-k IVF ingest delta — the full-precision twin of
-    // q_sim_ann_ivfpq_delta, completing the delta family (exact-hash,
-    // minhash, LSH, semantic, PQ all have one): a new embedding batch
-    // (vec_id%10=7) ranks its 2⌈√k⌉ probe cells FRESH against the frozen
-    // centroid artifact (same scoring expression as the corpus build, so
-    // batch probes ≡ the corpus probe index restricted to batch ids) and
-    // meets only the PERSISTED top-2 corpus assignment — O(batch × cell)
-    // work per ingest, the corpus is never rescored.
-    "q_sim_ann_ivf_k_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
-      val e = t(s, d, "embeddings")
-      val cents = ivfKCentroids(s, d)
-      val np = 2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt
-      val probes = ivfKCellsFor(e.where(isBatch), cents, np)
-      val cands = probes.as("a")
-        .join(maybeBroadcast(ivfKAssign2(s, d).where(!isBatch).as("b")),
-          col("a.cell") === col("b.cell"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val ev = e.select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(ev.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(ev.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
-    }),
+    // q_sim_ann_ivfpq_delta: a new embedding batch (vec_id%10=7) ranks
+    // its 2⌈√k⌉ probe cells FRESH against the frozen centroid artifact
+    // and meets only the PERSISTED top-2 corpus assignment — O(batch ×
+    // cell) work per ingest, the corpus never rescored.
+    "q_sim_ann_ivf_k_delta" -> annDelta(ivfKTier),
 
     // Index-lifecycle drift monitor — the retrain trigger that closes the
     // build → persist → delta-ingest loop. Per trained-k cell: how far
@@ -4072,119 +3832,39 @@ object LlmPipeline extends QueryPack {
           .select(col("cell"), col("embedding")))),
 
     // IVF-PQ with ADC scoring — the standard large-scale vector-search
-    // composition: the trained-k IVF narrows candidates (⌈√k⌉ probe
-    // cells), then PRODUCT-QUANTIZED distances rank them — each database
-    // vector is its 8 nibble codes, approximate distance = Σ of
-    // per-subspace (query-subvector − codebook-centroid)² — and only the
-    // ADC top-10 get exact-cosine reranked for the final top-3. The
+    // composition: the trained-k IVF narrows candidates, then
+    // PRODUCT-QUANTIZED distances rank them — each database vector is its
+    // 8 nibble codes, approximate distance = Σ of per-subspace
+    // (query-subvector − codebook-centroid)² — and only the ADC shortlist
+    // (PQ_RERANK) gets exact-cosine reranked for the final top-3. The
     // subspace math happens ONCE per (query, subspace, code) in the ADC
-    // DISTANCE TABLE (N × M×K scalar rows — FAISS's per-query lookup
-    // table, relationally); the per-candidate stage is then pure nibble
-    // equi-joins + a sum, so at 100 TB the wide vectors are touched for
-    // exactly 10 candidates per query and the candidate volume never
-    // multiplies any vector arithmetic. (The naive per-candidate compute
-    // was measured 14× slower at sf0.1: 10.8 s → this shape.)
-    "q_sim_ann_ivfpq" -> ((s, d) => {
-      val probes = spread(ivfKProbes(s, d))
-      val assigned = ivfKAssign2(s, d)
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      pqAdcRerank(s, d, cands, pqCodesWide(s, d), pqCorpusDtable(s, d))
-    }),
+    // DISTANCE TABLE (FAISS's per-query lookup table, relationally), so the
+    // candidate volume never multiplies any vector arithmetic. (The naive
+    // per-candidate compute was measured 14× slower at sf0.1: 10.8 s →
+    // this shape.)
+    "q_sim_ann_ivfpq" -> annRegistry(ivfPqTier),
 
     // IVF-PQ ingest delta — the production property that makes PQ worth
     // its training cost: codebooks and the corpus code index are FROZEN
-    // artifacts; a new embedding batch (vec_id%10=7) is encoded against
-    // them at ingest price. The batch computes its own probe cells and
-    // ADC distance table fresh (O(batch × M×K) scalars) and probes the
-    // PERSISTED corpus assignment + nibble index — the corpus's wide
-    // vectors are touched only for the ADC top-10 rerank, same as the
-    // LSH/minhash/exact-hash deltas in this family.
-    "q_sim_ann_ivfpq_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
-      val e = t(s, d, "embeddings")
-      val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
-      // batch probe list against the frozen coarse quantizer: np = 2⌈√k⌉,
-      // k bounded by the centroid artifact itself (a √N-row table)
-      val cents = ivfKCentroids(s, d)
-      val np = 2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt
-      val probes = spread(ivfKCellsFor(e.where(isBatch), cents, np))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(ivfKAssign2(s, d).where(!isBatch).as("b")),
-          col("a.cell") === col("b.cell"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      pqAdcRerank(s, d, cands,
-        pqCodesWide(s, d).where(!(col("nid") % 10 === 7)),
-        // the batch's ADC table is O(batch·M·K) scalars by construction
-        // — broadcast its WIDE per-query form so the one-join ADC stage
-        // stays map-side (a fresh batch plan has no size estimate, so
-        // the generic gate would decline and re-shuffle the candidate
-        // set by qid). Size-gated on the EXACT fixture batch size from
-        // the persisted corpus count (ADVICE r14): past the broadcast
-        // budget the join degrades to a shuffled join, not a forced OOM
-        maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(e.where(isBatch), cb)),
-          embCount(s, d) / 10 + 1))
-    }),
+    // artifacts; a new embedding batch (vec_id%10=7) computes its own
+    // probe cells and ADC distance table (O(batch × M×K) scalars) and
+    // probes the PERSISTED corpus assignment + nibble index.
+    "q_sim_ann_ivfpq_delta" -> annDelta(ivfPqTier),
 
     // Constant-cell IVF-PQ — the memory-economy tier re-dialed for the
-    // linear class (the one scale `weak` left open in round 11): PQ's
-    // 4-byte codes + ADC ranking, but candidates come from the PERSISTED
-    // k = N/c two-level quantizer q_sim_ann_ivfc probes instead of the
-    // √N-dial trained-k index. Per query: IVFC_NP·c candidate rows (both
-    // constants), ADC = nibble equi-joins + a column sum on UNEXPANDED
-    // candidate rows, exact rerank touches wide vectors for PQ_RERANK
-    // ids only — so total candidate volume is O(N·NP·c), the linear
-    // class q_sim_ann_ivfpq's N² dials can't reach, at PQ's memory
-    // price. Every artifact is frozen and shared: the semantic family's
-    // coarse/fine centroids + top-2 assignment, the PQ codebooks/nibble
-    // index, and the ADC distance table are all reused as-is.
-    "q_sim_ann_ivfc_pq" -> ((s, d) => {
-      val probes = spread(ivfcProbes(s, d))
-      val assigned = semAssign2(s, d).select(col("vec_id"), col("cell"))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      pqAdcRerank(s, d, cands, pqCodesWide(s, d), pqCorpusDtable(s, d))
-    }),
+    // linear class: PQ's 4-byte codes + ADC ranking, but candidates come
+    // from the PERSISTED k = N/c two-level quantizer q_sim_ann_ivfc probes
+    // instead of the √N-dial trained-k index, so total candidate volume is
+    // O(N·NP·c) at PQ's memory price. Every artifact is frozen and shared
+    // with q_sim_ann_ivfc and q_sim_ann_ivfpq.
+    "q_sim_ann_ivfc_pq" -> annRegistry(ivfcPqTier),
 
-    // Constant-cell IVF-PQ ingest delta — the per-ingest face: a new
-    // embedding batch (vec_id%10=7) ranks its probe cells FRESH against
-    // the frozen coarse+fine centroids (identical scoring chain — batch
-    // probes ≡ the corpus probe list restricted to batch ids), computes
-    // its own ADC distance table (O(batch × M×K) scalars), and probes
-    // only the PERSISTED top-2 corpus assignment + nibble index —
-    // O(batch·NP·c) work per ingest with N-independent dials; the
-    // corpus is never rescored and its wide vectors are touched only
-    // for the ADC shortlist rerank.
-    "q_sim_ann_ivfc_pq_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
-      val e = t(s, d, "embeddings")
-      val probes = spread(ivfcProbesFor(s, d, e.where(isBatch)))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(semAssign2(s, d).where(!isBatch)
-            .select(col("vec_id"), col("cell")).as("b")),
-          col("a.cell") === col("b.cell"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
-      pqAdcRerank(s, d, cands,
-        pqCodesWide(s, d).where(!(col("nid") % 10 === 7)),
-        // the batch's ADC table is O(batch·M·K) scalars by construction
-        // — broadcast its WIDE per-query form so the one-join ADC stage
-        // stays map-side (a fresh batch plan has no size estimate, so
-        // the generic gate would decline and re-shuffle the candidate
-        // set by qid). Size-gated on the EXACT fixture batch size from
-        // the persisted corpus count (ADVICE r14): past the broadcast
-        // budget the join degrades to a shuffled join, not a forced OOM
-        maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(e.where(isBatch), cb)),
-          embCount(s, d) / 10 + 1))
-    }),
+    // Constant-cell IVF-PQ ingest delta: a new embedding batch
+    // (vec_id%10=7) ranks its probe cells FRESH against the frozen
+    // coarse+fine centroids, computes its own ADC distance table, and
+    // probes only the PERSISTED top-2 corpus assignment + nibble index —
+    // O(batch·NP·c) work per ingest with N-independent dials.
+    "q_sim_ann_ivfc_pq_delta" -> annDelta(ivfcPqTier),
 
     // End-to-end training-data pipeline — the composition a real corpus
     // run executes: exact-dedup keepers → quality filter → deterministic

@@ -92,6 +92,28 @@ class IngestSpec extends AnyFunSuite {
     }
   }
 
+  test("annLshc pins the same spread partition count as q_sim_ann_lshc_delta") {
+    // both faces size their one pinned exchange from the session's
+    // effective shuffle-partition count, which AQE takes from
+    // initialPartitionNum when that is set
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val prev = spark.conf.getOption(key)
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt + 3
+    spark.conf.set(key, n.toString)
+    try {
+      def pinned(df: DataFrame): Seq[Int] =
+        "Exchange hashpartitioning\\(vec_id#\\d+L?, (\\d+)\\), REPARTITION_BY_NUM".r
+          .findAllMatchIn(df.queryExecution.executedPlan.toString)
+          .map(_.group(1).toInt).toSeq
+      val twin = pinned(q("q_sim_ann_lshc_delta"))
+      assert(twin == Seq(n), s"delta twin pins $twin, expected $n")
+      assert(pinned(Ingest.annLshc(spark, sf, vecBatch)) == twin)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   // ---- 2. non-modulo batches with genuinely new ids ----
 
   test("exactDedup on a non-modulo batch: re-ingest, corpus copy, batch dup, novel") {

@@ -633,13 +633,18 @@ class PlanSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding"))
     Ingest.deleteVectors(s, d, Seq(3L).toDF("vec_id"))
     val probe = Seq((6000L, unit())).toDF("vec_id", "embedding")
-    val df = Ingest.annIvfc(s, d, probe)
-    df.collect() // finalize AQE on THIS plan
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("SortMergeJoin"),
-      s"overlay/tombstone leg fell off broadcast:\n$p")
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
-      s"expected candidate + rerank + tombstone broadcasts:\n$p")
+    for ((face, ann) <- Seq(
+        "annLsh" -> Ingest.annLsh _, "annLshc" -> Ingest.annLshc _,
+        "annIvfK" -> Ingest.annIvfK _, "annIvfc" -> Ingest.annIvfc _,
+        "annIvfPq" -> Ingest.annIvfPq _, "annIvfcPq" -> Ingest.annIvfcPq _)) {
+      val df = ann(s, d, probe)
+      df.collect() // finalize AQE on THIS plan
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("SortMergeJoin"),
+        s"$face: overlay/tombstone leg fell off broadcast:\n$p")
+      assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
+        s"$face: expected candidate + rerank + tombstone broadcasts:\n$p")
+    }
     // r18: the tombstone anti-join must ride an EXPLICIT hint derived
     // from the manifest chain's exact deleted count — Catalyst's own
     // estimate through distinct-over-parquet can be inflated/unknown and
