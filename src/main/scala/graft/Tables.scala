@@ -90,13 +90,32 @@ object Tables {
       // compiled code lives in the JIT code cache either way (already
       // sized at 1g in build.sbt). Scale-independent: any long-lived
       // session serving this many distinct operators needs the same dial.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.codegen.cache.maxEntries", staticConfs("spark.sql.codegen.cache.maxEntries"))
       // registers native expressions (cosine_sim) with the SQL registry
-      .config("spark.sql.extensions", "org.apache.spark.sql.graftx.GraftExtensions")
+      .config("spark.sql.extensions", staticConfs("spark.sql.extensions"))
       // bucketed-table catalog (Sinks.writeBucketed) — keep out of the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-    b.getOrCreate()
+    val s = b.getOrCreate()
+    staticConfMismatches(s).foreach(m => org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"static conf not in effect (getOrCreate returned an existing session): $m"))
+    s
   }
+
+  /** Static confs the engine's cost or behaviour depends on. An existing
+    * session that `getOrCreate` returns keeps its own values for these
+    * silently, so [[mkSession]] reads them back. */
+  private[graft] val staticConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.sql.extensions" -> "org.apache.spark.sql.graftx.GraftExtensions")
+
+  /** `key=actual (wanted expected)` for each of `want` the session does
+    * not carry. */
+  private[graft] def staticConfMismatches(s: SparkSession,
+      want: Map[String, String] = staticConfs): Seq[String] =
+    want.toSeq.sorted.collect {
+      case (k, v) if !s.conf.getOption(k).contains(v) =>
+        s"$k=${s.conf.getOption(k).getOrElse("<unset>")} (wanted $v)"
+    }
 
   val DEC: DecimalType = DecimalType(38, 6)
 
@@ -231,8 +250,9 @@ object Tables {
         .map("%02x".format(_)).mkString.take(12)
     })
 
-  /** Root of every per-dataset index store. A deployment knob (env
-    * `GRAFT_INDEX_ROOT`, or the `graft.index.root` system property): the
+  /** Root of every per-dataset index store. A deployment knob (the
+    * `graft.index.root` system property, else env `GRAFT_INDEX_ROOT`; the
+    * property is set inside the JVM, so it wins over the inherited env): the
     * artifacts, overlay chain and corpus generations must live on
     * SHARED storage at the stated 100 TB target (an HDFS/object-store
     * path), not a node-local /tmp — the whole store layer already runs
@@ -240,8 +260,8 @@ object Tables {
     * the r20 non-local publish tests drive this knob at a non-`file`
     * scheme. Default stays the local path the sandbox uses. */
   private def indexRoot: String =
-    sys.env.get("GRAFT_INDEX_ROOT")
-      .orElse(sys.props.get("graft.index.root"))
+    sys.props.get("graft.index.root")
+      .orElse(sys.env.get("GRAFT_INDEX_ROOT"))
       .getOrElse("/tmp/graft-index")
 
   private[graft] def indexDir(d: String): String =

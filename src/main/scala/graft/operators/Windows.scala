@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryPack, Tables}
 import graft.Tables._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
@@ -127,9 +128,12 @@ object Windows extends QueryPack {
     // size is timespan-bounded, not corpus-bounded), average observed
     // values per cell through exact decimal partials, and interpolate
     // missing cells between the nearest observed neighbors (IGNORE NULLS
-    // last/first over mirrored frames; edges carry the nearest value).
-    // The observed cell value is pre-rounded so the interpolation inputs
-    // are bit-identical across engines.
+    // last over a running frame in each direction: the next observation is
+    // the last one seen scanning h descending, so both passes are O(L) per
+    // user; a (currentRow, unboundedFollowing) frame re-evaluates its whole
+    // suffix per row, O(L²)). Edges carry the nearest value. The observed
+    // cell value is pre-rounded so the interpolation inputs are
+    // bit-identical across engines.
     "q_window_resample" -> ((s, d) => {
       val ev = t(s, d, "events")
         .select(col("user_id"), tsec(col("ts")).as("et"), col("value"))
@@ -139,14 +143,17 @@ object Windows extends QueryPack {
       val span = ev.groupBy("user_id").agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
       val grid = span.select(col("user_id"),
         explode(sequence(col("h0"), col("h1"), lit(3600L))).as("h"))
-      val w = Window.partitionBy("user_id").orderBy("h")
-      val wp = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wn = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      // h is unique per user, so the descending pass sees exactly the
+      // mirror of the ascending one
+      def running(o: Column) = Window.partitionBy("user_id").orderBy(o)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val wp = running(col("h").asc)
+      val wn = running(col("h").desc)
       grid.join(obs, Seq("user_id", "h"), "left")
         .withColumn("pv", last(col("v_obs"), ignoreNulls = true).over(wp))
         .withColumn("ph", last(when(col("v_obs").isNotNull, col("h")), true).over(wp))
-        .withColumn("nv", first(col("v_obs"), ignoreNulls = true).over(wn))
-        .withColumn("nh", first(when(col("v_obs").isNotNull, col("h")), true).over(wn))
+        .withColumn("nv", last(col("v_obs"), ignoreNulls = true).over(wn))
+        .withColumn("nh", last(when(col("v_obs").isNotNull, col("h")), true).over(wn))
         .withColumn("v_filled", r4(
           when(col("v_obs").isNotNull, col("v_obs"))
             .when(col("ph").isNull, col("nv"))

@@ -33,5 +33,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rewrite: row_number() <= k filter pattern → TopKPerKey, so
     // the idiomatic window form still gets the map-side-heap physical plan
     ext.injectOptimizerRule(_ => RewriteRankFilterToTopK)
+    // AQE re-planning: a global sort over a measured-small input skips the
+    // range partitioner's sampling job
+    ext.injectQueryStagePrepRule(SmallSortSinglePartition)
   }
 }

@@ -56,4 +56,17 @@ class GraphsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("q_graph_reach equals a plain BFS over the collected edges") {
+    val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    var dist = Map(0L -> 0)
+    var frontier = Set(0L)
+    for (h <- 1 to 4) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Set.empty)).filterNot(dist.contains)
+      dist ++= frontier.map(_ -> h)
+    }
+    val got = SparkEntry.queries("q_graph_reach")(s, d)
+      .collect().map(r => asL(r, 0) -> asL(r, 1).toInt).toSeq
+    assert(got == dist.toSeq.sortBy(_._1))
+  }
 }

@@ -840,4 +840,77 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(gens.size == 2, s"expected posexplode+explode pair:\n${df.queryExecution.executedPlan}")
   }
+
+  /** One collect of a freshly built `name`: its rows in order, its final
+    * plan, and the number of Spark jobs the collect started. */
+  private def collectCounted(name: String): (Seq[org.apache.spark.sql.Row], String, Int) = {
+    val df = SparkEntry.queries(name)(spark, TestSpark.SF)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val rows = df.collect().toSeq
+      // job events post asynchronously: wait until the count holds still
+      var (last, stable, waited) = (-1, 0, 0)
+      while (stable < 3 && waited < 5000) {
+        Thread.sleep(100); waited += 100
+        if (jobs.get == last) stable += 1 else { stable = 0; last = jobs.get }
+      }
+      (rows, df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a small measured global sort gathers through one partition, without the range-sampling job") {
+    val (rows, fin, jobs) = collectCounted("q_agg_hash")
+    assert(!fin.contains("rangepartitioning"), fin)
+    assert(fin.contains("Exchange SinglePartition"), fin)
+    // with partition coalescing off the rule cannot fire: the range
+    // exchange stays, and its partitioner runs one sampling job more
+    val (offRows, offFin, offJobs) =
+      withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        collectCounted("q_agg_hash")
+      }
+    assert(offFin.contains("rangepartitioning"), offFin)
+    assert(jobs == offJobs - 1, s"jobs: $jobs with the rule, $offJobs without")
+    assert(rows == offRows, "rows or their order changed")
+  }
+
+  test("a global sort whose measured input exceeds the one-partition size keeps its range exchange") {
+    val (_, fin, _) = withConfs(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1b",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b") {
+      collectCounted("q_agg_hash")
+    }
+    assert(fin.contains("rangepartitioning"), fin)
+  }
+
+  test("no registered query evaluates a suffix window frame (O(L²) per partition)") {
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
+    // Spark evaluates a (lower, UNBOUNDED FOLLOWING) frame whose lower bound
+    // moves with the row by recomputing the aggregate over the whole
+    // suffix for every row; a running frame over the reversed order gives
+    // the same values in O(L)
+    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val frames = fn(spark, TestSpark.SF).queryExecution.optimizedPlan
+        .collectWithSubqueries { case p => p.expressions.flatMap(_.collect {
+          case f @ SpecifiedWindowFrame(_, lower, UnboundedFollowing)
+              if lower != UnboundedPreceding => f
+        }) }.flatten
+      frames.map(f => s"$name: ${f.sql}")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
 }

@@ -33,6 +33,14 @@ class QueryPackSpec extends AnyFunSuite {
     assert(q.diff(o) == noOracle, s"unexpected oracle omissions: ${q.diff(o).diff(noOracle)}")
   }
 
+  test("mkSession's static confs are in effect, and a mismatch is reported") {
+    assert(Tables.staticConfMismatches(spark).isEmpty,
+      Tables.staticConfMismatches(spark).mkString("; "))
+    val planted = Tables.staticConfs.updated("spark.sql.codegen.cache.maxEntries", "100")
+    assert(Tables.staticConfMismatches(spark, planted) ==
+      Seq("spark.sql.codegen.cache.maxEntries=4096 (wanted 100)"))
+  }
+
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
