@@ -154,7 +154,7 @@ object CorpusGen {
   def watermark(d: String): Int = current(d).map(_.watermark).getOrElse(-1)
 
   private def readRefs(s: SparkSession, refs: Seq[BRef]): Option[DataFrame] =
-    if (refs.isEmpty) None else Some(s.read.parquet(refs.map(_.path): _*))
+    if (refs.isEmpty) None else Some(Tables.readStored(s, refs.map(_.path): _*))
 
   /** The promoted corpus snapshot for `table` ("documents" /
     * "embeddings"), when the current generation carries one — a union
@@ -163,7 +163,7 @@ object CorpusGen {
   def table(s: SparkSession, d: String, table: String): Option[DataFrame] =
     current(d).filter(_.tableRows.contains(table)).map { g =>
       readRefs(s, g.tblB.getOrElse(table, Seq.empty))
-        .getOrElse(s.read.parquet(s"${g.path}/tables/$table"))
+        .getOrElse(Tables.readStored(s, s"${g.path}/tables/$table"))
     }
 
   /** [[table]] restricted to the given buckets — the path-level prune
@@ -189,7 +189,7 @@ object CorpusGen {
   def artifact(s: SparkSession, d: String, family: String): Option[DataFrame] =
     current(d).filter(_.artRows.contains(family)).map { g =>
       readRefs(s, g.artB.getOrElse(family, Seq.empty))
-        .getOrElse(s.read.parquet(s"${g.path}/art/$family"))
+        .getOrElse(Tables.readStored(s, s"${g.path}/art/$family"))
     }
 
   /** [[artifact]] restricted to the given buckets ([[tableBuckets]]'s

@@ -54,7 +54,14 @@ import org.apache.spark.sql.types._
   *    directory listing plus µs-scale file reads, never a Spark job — and
   *    it carries per-family ROW COUNTS, so tombstone-set sizes and the
   *    [[Ingest.overlayReport]] statistics come from the chain, not from
-  *    count jobs.
+  *    count jobs. Reading the SEGMENTS the chain names runs no job
+  *    either: their schema comes from the Spark footer driver-side
+  *    ([[Tables.readStored]]), not from a schema-inference job.
+  *  - The families of one commit are written CONCURRENTLY
+  *    ([[appendAll]]) — each goes to its own directory and none reads
+  *    another. Crash atomicity does not depend on their order: nothing
+  *    is visible until the one manifest publish, and a failed sibling
+  *    leaves only orphans for the next compact.
   *
   * Scope and conventions:
   *  - Committed rows are derived under the FROZEN geometry (hyperplanes,
@@ -244,7 +251,7 @@ object IndexOverlay {
     * at every plan construction (ADVICE r17). */
   private[graft] def read(s: SparkSession, d: String, family: String): Option[DataFrame] = {
     val segs = segments(d, family)
-    if (segs.isEmpty) None else Some(s.read.parquet(segs: _*))
+    if (segs.isEmpty) None else Some(Tables.readStored(s, segs: _*))
   }
 
   /** Base artifact ∪ committed overlay rows, aligned to the base's
@@ -295,7 +302,7 @@ object IndexOverlay {
     // column names AND types (modulo nullability), or a later multi-path
     // read would coerce or null silently
     segments(d, family).headOption.foreach { seg0 =>
-      val have = normalize(s.read.parquet(seg0).schema)
+      val have = normalize(Tables.readStored(s, seg0).schema)
       val got = normalize(rows.schema)
       require(got == have,
         s"overlay family '$family': append schema ${got.simpleString} " +
@@ -321,6 +328,37 @@ object IndexOverlay {
     }
     throw new IllegalStateException(
       s"overlay append to '$family' lost ${attempts} consecutive publish races")
+  }
+
+  /** [[append]] of several families' rows, each on its own thread: the
+    * families of one commit or compaction go to separate directories
+    * and none reads another, so their writes need not queue behind each
+    * other. The threads are created for this call, so each inherits the
+    * caller's Spark local properties (job group — cancellation and
+    * per-operation job attribution cover the writes), active session and
+    * [[CorpusGen.pinned]] snapshot; a long-lived pool would carry stale
+    * ones. Every thread is joined before this returns or throws. The
+    * first failure in input order is rethrown as itself (later ones ride
+    * along as suppressed); its siblings' segments stay unmanifested
+    * orphans. Returns (family, segment path, rows) in input order. */
+  private[graft] def appendAll(s: SparkSession, d: String,
+      parts: Seq[(String, DataFrame)]): Seq[(String, String, Long)] = {
+    val out = new Array[Either[Throwable, (String, Long)]](parts.size)
+    val threads = parts.zipWithIndex.map { case ((family, rows), i) =>
+      new Thread(() => out(i) =
+        try Right(append(s, d, family, rows)) catch { case e: Throwable => Left(e) },
+        s"overlay-append-$family")
+    }
+    threads.foreach(_.start())
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    val failures = out.collect { case Left(e) => e }
+    failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
+    parts.zip(out).collect { case ((family, _), Right((p, n))) => (family, p, n) }
   }
 
   /** Remove an UNMANIFESTED published segment this writer owns (its

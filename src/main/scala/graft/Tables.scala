@@ -20,7 +20,11 @@ object Tables {
     * inference job on EVERY call ("parquet at Tables.scala" in the job
     * log), so before this memo a bench pass paid ~1–3 tiny scheduled
     * jobs per query CONSTRUCTION (≈2,000 across Bench's four passes of
-    * the 201-query registry) — pure plan-latency, no data read.
+    * the 201-query registry) — pure plan-latency, no data read. The
+    * source tables are written by other tools (no Spark footer schema),
+    * hence the memo; parquet the engine writes itself (index artifacts,
+    * overlay segments, corpus generations) is read job-free through
+    * [[readStored]] instead, memo or not.
     *
     * Sharing CONVENTIONS (ADVICE r15) — the memo is only sound because:
     *  - A source dir is IMMUTABLE within a session: nothing in this repo
@@ -299,7 +303,23 @@ object Tables {
         buildDepth.set(buildDepth.get - 1)
         if (buildDepth.get == 0) artifactBuildNanos.addAndGet(System.nanoTime() - t0)
       }
-      s.read.parquet(path)
+      readStored(s, path)
+    }
+
+  /** The one reader for parquet the engine wrote itself: the schema
+    * comes from the Spark footer, driver-side
+    * ([[graft.sources.Store.parquetSparkSchema]]), so constructing the
+    * read starts no schema-inference job — the overlay is re-read at
+    * every ingest plan construction, where that job was a fixed cost of
+    * every call. Without such a footer (another writer's files, a
+    * partitioned dir) it is a plain `read.parquet`. The paths of one call
+    * share one schema (a family's segments pass the append drift gate,
+    * an artifact's buckets come from one write), so the first path's
+    * footer speaks for all. */
+  def readStored(s: SparkSession, paths: String*): DataFrame =
+    graft.sources.Store.parquetSparkSchema(paths.head) match {
+      case Some(schema) => s.read.schema(schema).parquet(paths: _*)
+      case None => s.read.parquet(paths: _*)
     }
 
   /** 60-bit portable numeric hash of a string column: first 15 hex digits

@@ -1596,7 +1596,7 @@ object LlmPipeline extends QueryPack {
       tombs: Seq[(String, Int, Long)]): DataFrame =
     if (tombs.isEmpty) df
     else {
-      val del = s.read.parquet(tombs.map(_._1): _*)
+      val del = Tables.readStored(s, tombs.map(_._1): _*)
       val sel = del.select(col(del.columns.head).as(idCol)).distinct()
       val n = tombs.map(_._3).sum
       df.join(
@@ -1666,7 +1666,7 @@ object LlmPipeline extends QueryPack {
     * rather than silently un-shadowing the row). */
   private def segScanWithSeq(s: SparkSession,
       segs: Seq[(String, Int, Long)]): DataFrame = {
-    val df = s.read.parquet(segs.map(_._1): _*)
+    val df = Tables.readStored(s, segs.map(_._1): _*)
     val segToSeq = map(segs.flatMap { case (p, sq, _) =>
       Seq(lit(graft.sources.Store.name(p)), lit(sq)) }.toIndexedSeq: _*)
     // anchored to the file's PARENT component (ADVICE r18): the segment
@@ -2204,9 +2204,9 @@ object LlmPipeline extends QueryPack {
 
   /** Shared publish tail of the commit verbs: append `novel` as the raw
     * family's segment (the write IS the emptiness check), derive every
-    * index family from the published parquet, and flip them all visible
-    * through ONE manifest — all-or-nothing for readers and the novelty
-    * base. */
+    * index family from the published parquet and append them together
+    * ([[IndexOverlay.appendAll]]), and flip them all visible through ONE
+    * manifest — all-or-nothing for readers and the novelty base. */
   private def publishCommit(s: SparkSession, d: String, rawFam: String,
       novel: DataFrame,
       derive: DataFrame => Seq[(String, DataFrame)]): DataFrame = {
@@ -2214,16 +2214,21 @@ object LlmPipeline extends QueryPack {
     commitReport(s,
       if (nRaw == 0L) { IndexOverlay.discardSegment(rawPath); Seq.empty }
       else {
-        val pub = s.read.parquet(rawPath)
-        val segs = (rawFam, rawPath, nRaw) +:
-          derive(pub).flatMap { case (fam, df) =>
-            val (p, n) = IndexOverlay.append(s, d, fam, df)
-            if (n == 0L) { IndexOverlay.discardSegment(p); None }
-            else Some((fam, p, n))
-          }
+        val segs = (rawFam, rawPath, nRaw) +: nonEmptySegs(
+          IndexOverlay.appendAll(s, d, derive(Tables.readStored(s, rawPath))))
         IndexOverlay.publishManifest(s, d, segs, full = false)
         segs
       })
+  }
+
+  /** The non-empty segments of an [[IndexOverlay.appendAll]] result; the
+    * zero-row ones are discarded (an empty family gets no manifest
+    * entry). */
+  private def nonEmptySegs(
+      segs: Seq[(String, String, Long)]): Seq[(String, String, Long)] = {
+    val (kept, empty) = segs.partition(_._3 > 0L)
+    empty.foreach(e => IndexOverlay.discardSegment(e._2))
+    kept
   }
 
   /** REPLACE (upsert) step of the doc-ingest lifecycle
@@ -2283,11 +2288,12 @@ object LlmPipeline extends QueryPack {
     * (the r17 "plan executed twice" lesson applied forward: without it
     * the visibility join would run again for the tombstone's semi-join)
     * — then everything downstream reads the O(batch) pinned result: the
-    * raw segment appends the (id, payload) columns, the tombstone
-    * appends EVERY landing id, the derived families compute from the
-    * published raw parquet, and ONE manifest flips rows + tombstone
-    * visible together (sequence rule: the co-published tombstone
-    * shadows every OLDER copy of those ids, never the replacements).
+    * raw segment appends the (id, payload) columns, then the tombstone
+    * (EVERY landing id) and the derived families (computed from the
+    * published raw parquet) append together, and ONE manifest flips
+    * rows + tombstone visible together (sequence rule: the co-published
+    * tombstone shadows every OLDER copy of those ids, never the
+    * replacements).
     *
     * The tombstone covers every id that lands — not just the
     * `was_visible` ones (ADVICE r18): when two replaces race on an id
@@ -2308,18 +2314,10 @@ object LlmPipeline extends QueryPack {
       IndexOverlay.discardSegment(rawPath)
       return commitReport(s, Seq.empty)
     }
-    val pub = s.read.parquet(rawPath)
-    val superseded = pinned.select(idCol)
-    val (tombPath, nTomb) = IndexOverlay.append(s, d, delFam, superseded)
-    val extra =
-      if (nTomb == 0L) { IndexOverlay.discardSegment(tombPath); Nil }
-      else Seq((delFam, tombPath, nTomb))
-    val segs = extra ++ ((rawFam, rawPath, nRaw) +:
-      derive(pub).flatMap { case (fam, df) =>
-        val (p, n) = IndexOverlay.append(s, d, fam, df)
-        if (n == 0L) { IndexOverlay.discardSegment(p); None }
-        else Some((fam, p, n))
-      })
+    val (tomb, fams) = nonEmptySegs(IndexOverlay.appendAll(s, d,
+      (delFam -> pinned.select(idCol)) +: derive(Tables.readStored(s, rawPath))))
+      .partition(_._1 == delFam)
+    val segs = tomb ++ ((rawFam, rawPath, nRaw) +: fams)
     IndexOverlay.publishManifest(s, d, segs, full = false)
     commitReport(s, segs)
   }
@@ -2488,7 +2486,7 @@ object LlmPipeline extends QueryPack {
     val delVec = IndexOverlay.read(s, d, famVecsDeleted)
       .map(df => df.select(col("vec_id")).distinct())
     val tombFams = Set(famDocsDeleted, famVecsDeleted)
-    val dataOut = eff.keys.filterNot(tombFams).toSeq.sorted.map { fam =>
+    val dataFolds = eff.keys.filterNot(tombFams).toSeq.sorted.map { fam =>
       // the fold keeps exactly the VISIBLE rows under the chain's
       // sequence rule — a replaced/re-inserted id keeps its newest row
       // (an all-tombstone anti-join would drop it), the superseded
@@ -2504,8 +2502,10 @@ object LlmPipeline extends QueryPack {
       val folded =
         if (delFam.isEmpty) IndexOverlay.read(s, d, fam).get.distinct()
         else overlayVisible(s, d, fam, idCol, delFam).get.distinct()
-      (fam, IndexOverlay.append(s, d, fam, folded))
+      fam -> folded
     }
+    // the folds write concurrently (each to its own family dir)
+    val dataOut = IndexOverlay.appendAll(s, d, dataFolds)
     // tombstone fold LAST (their new content must reflect what the data
     // families above were filtered with): keep corpus-stored ids only —
     // a base row must stay hidden whether its id was deleted or
@@ -2513,7 +2513,7 @@ object LlmPipeline extends QueryPack {
     // which the folded tombstone does not shadow), while an id that
     // lived only in the overlay is physically gone now, so its
     // tombstone folds away and the id is novel again
-    val tombOut = Seq(
+    val tombFolds = Seq(
       (famDocsDeleted, delDoc, "doc_id"),
       (famVecsDeleted, delVec, "vec_id")).flatMap {
       case (fam, del, idCol) => del.map { ids =>
@@ -2523,16 +2523,15 @@ object LlmPipeline extends QueryPack {
         val corpusIds =
           if (idCol == "doc_id") corpusDocs(s, d).select(col(idCol))
           else corpusVecs(s, d).select(col(idCol))
-        (fam, IndexOverlay.append(s, d, fam,
-          ids.join(corpusIds, Seq(idCol), "left_semi")))
+        fam -> ids.join(corpusIds, Seq(idCol), "left_semi")
       }
     }
+    val tombOut = IndexOverlay.appendAll(s, d, tombFolds)
     val out = dataOut ++ tombOut
-    IndexOverlay.publishManifest(s, d,
-      out.collect { case (fam, (p, n)) if n > 0L => (fam, p, n) }, full = true)
-    out.collect { case (_, (p, 0L)) => p }.foreach(IndexOverlay.discardSegment)
+    IndexOverlay.publishManifest(s, d, out.filter(_._3 > 0L), full = true)
+    out.collect { case (_, p, 0L) => p }.foreach(IndexOverlay.discardSegment)
     IndexOverlay.gc(d, retainMillis)
-    commitCompactReport(s, out.map { case (fam, (p, n)) =>
+    commitCompactReport(s, out.map { case (fam, p, n) =>
       val before = eff.getOrElse(fam, Seq.empty)
       (fam, before.size, before.map(_.rows).sum,
         if (n > 0L) p else null, n)
@@ -2841,11 +2840,11 @@ object LlmPipeline extends QueryPack {
         tables += name -> (fresh ++ carried).map(_.rows).sum
         tbRefs ++= (fresh ++ carried).map(name -> _)
         val touchedBack =
-          if (fresh.nonEmpty) s.read.parquet(s"$tmp/tables/$name").drop("_bkt")
-          else s.read.parquet(carried.map(_.path): _*).where(lit(false))
+          if (fresh.nonEmpty) Tables.readStored(s, fresh.map(_.path): _*)
+          else Tables.readStored(s, carried.map(_.path): _*).where(lit(false))
         val all =
           if (carried.isEmpty) touchedBack
-          else touchedBack.unionByName(s.read.parquet(carried.map(_.path): _*))
+          else touchedBack.unionByName(Tables.readStored(s, carried.map(_.path): _*))
         (touchedBack, all)
       }
 

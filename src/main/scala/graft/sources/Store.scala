@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Driver-side metadata/store operations for the index lifecycle
   * ([[graft.IndexOverlay]]'s manifest chain, [[Sinks.publishAtomic]],
@@ -161,6 +162,44 @@ object Store {
         val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, c))
         try r.getRecordCount finally r.close()
       }.sum
+  }
+
+  /** The schema Spark's parquet writer records in every footer it
+    * writes (key `org.apache.spark.sql.parquet.row.metadata`), read
+    * driver-side from the first part file of `path` (a flat parquet
+    * directory or a single file) — what `spark.read.parquet` would infer
+    * with a schema-inference JOB. None when no such footer exists: files
+    * another writer made (pyarrow, DuckDB), a hive-partitioned directory
+    * (its partition columns live in directory names), an empty or
+    * missing path. Every field is nullable, as a file scan reports it. */
+  def parquetSparkSchema(path: String): Option[StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val c = conf(); val p = new Path(path); val fs = fsOf(p, c)
+    // Spark's listing rule: `_x` and `.x` are hidden, except `_k=v` dirs
+    def visible(n: String) = !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
+    val children =
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq.filter(st => visible(st.getPath.getName))
+    if (children.exists(_.isDirectory)) None
+    else children.sortBy(_.getPath.getName).headOption.flatMap { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, c))
+      val json =
+        try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally r.close()
+      json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+        .map(nullable).collect { case s: StructType => s }
+    }
+  }
+
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
   /** Whether `path` resolves to the local filesystem — gates the

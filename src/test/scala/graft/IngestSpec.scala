@@ -1772,4 +1772,137 @@ class IngestSpec extends AnyFunSuite {
     assert(rebuilt.count() == 16L, // ⌈√256⌉ trained-k cells
       "the rebuilt quantizer must carry the standing-N dial")
   }
+
+  // ---- 6. per-call fixed cost: concurrent family appends, job-free reads ----
+
+  /** Jobs started while `body` runs: (job group, SQL execution id, stage
+    * names) each. */
+  private def jobsDuring(body: => Unit): Seq[(String, String, String)] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).map(_.getProperty(k)).orNull
+        jobs.add((prop("spark.jobGroup.id"), prop("spark.sql.execution.id"),
+          j.stageInfos.map(_.name).mkString(";")))
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(500) } // let the job events post
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.toArray(Array.empty[(String, String, String)]).toSeq
+  }
+
+  /** A corpus whose overlay holds a doc and a vector commit, a doc
+    * replace and a doc and a vector delete — every kind of segment the
+    * probes read. */
+  private lazy val lifecycleStore: String = {
+    import spark.implicits._
+    val d = freshCorpus("fxc")
+    val mkText = (tag: String) => (0 until 20).map(j => s"$tag$j").mkString(" ")
+    Ingest.commitDocs(spark, d,
+      (0 until 6).map(i => (1000L + i, mkText(s"fc${i}x"))).toDF("doc_id", "text"))
+    Ingest.commitVectors(spark, d, vecRows(2000L, 4, seed = 7L).toDF("vec_id", "embedding"))
+    Ingest.replaceDocs(spark, d,
+      Seq((1000L, mkText("fr0x")), (3L, mkText("fr3x"))).toDF("doc_id", "text"))
+    Ingest.deleteDocs(spark, d, Seq(1001L, 4L).toDF("doc_id"))
+    Ingest.deleteVectors(spark, d, Seq(2000L, 5L).toDF("vec_id"))
+    d
+  }
+
+  private def vecRows(from: Long, n: Int, seed: Long): Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val v = Array.fill(64)(rnd.nextGaussian())
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      (from + i, v.map(x => (x / norm).toFloat))
+    }
+  }
+
+  test("a derived family failing its drift gate fails the commit with that exception; nothing is published, siblings are orphans") {
+    import spark.implicits._
+    val d = freshCorpus("afl")
+    val mkText = (tag: String) => (0 until 20).map(j => s"$tag$j").mkString(" ")
+    // the doc-hash family's first segment carries an extra column, so the
+    // commit's own (doc_id, h) append fails the gate while its siblings
+    // write on their own threads
+    IndexOverlay.appendCommitted(spark, d, operators.Curation.famDocHashes,
+      Seq((5000L, "h", "x")).toDF("doc_id", "h", "extra"))
+    val m0 = IndexOverlay.maxManifestId(d)
+    val batch = (0 until 4).map(i => (1000L + i, mkText(s"af${i}x"))).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](Ingest.commitDocs(spark, d, batch))
+    assert(e.getMessage.contains("drifts"), e.getMessage)
+    assert(IndexOverlay.maxManifestId(d) == m0, "a failed commit published a manifest")
+    val probe = (0 until 4).map(i => (9000L + i, mkText(s"af${i}x"))).toDF("doc_id", "text")
+    assert(!Ingest.exactDedup(spark, d, probe).collect().exists(_.getBoolean(1)),
+      "a failed commit's rows are visible")
+    val orphans = Ingest.overlayReport(spark, d).collect()
+      .map(r => r.getString(0) -> r.getInt(4)).toMap
+    val siblings = orphans.keySet - operators.Curation.famDocHashes
+    assert(siblings.contains("docs_raw") && siblings.size == 5 &&
+      siblings.forall(orphans(_) == 1) && orphans(operators.Curation.famDocHashes) == 0,
+      s"orphans per family after the failed commit: $orphans")
+    Ingest.compact(spark, d)
+    val after = Ingest.overlayReport(spark, d).collect().map(r => r.getString(0) -> r.getInt(4))
+    assert(after.forall(_._2 == 0), s"compact left orphans: ${after.mkString(",")}")
+  }
+
+  test("constructing every Ingest probe over a committed, replaced and deleted overlay starts no Spark job") {
+    import spark.implicits._
+    val d = lifecycleStore
+    val docs = Seq((9000L, (0 until 20).map(j => s"fc0x$j").mkString(" "))).toDF("doc_id", "text")
+    val vecs = vecRows(9000L, 3, seed = 11L).toDF("vec_id", "embedding")
+    val probes: Seq[(String, () => DataFrame)] = Seq(
+      "minhashDedup" -> (() => Ingest.minhashDedup(spark, d, docs)),
+      "substringDedup" -> (() => Ingest.substringDedup(spark, d, docs)),
+      "exactDedup" -> (() => Ingest.exactDedup(spark, d, docs)),
+      "semanticDedup" -> (() => Ingest.semanticDedup(spark, d, vecs)),
+      "annLsh" -> (() => Ingest.annLsh(spark, d, vecs)),
+      "annLshc" -> (() => Ingest.annLshc(spark, d, vecs)),
+      "annIvfK" -> (() => Ingest.annIvfK(spark, d, vecs)),
+      "annIvfc" -> (() => Ingest.annIvfc(spark, d, vecs)),
+      "annIvfPq" -> (() => Ingest.annIvfPq(spark, d, vecs)),
+      "annIvfcPq" -> (() => Ingest.annIvfcPq(spark, d, vecs)))
+    probes.foreach(_._2().collect()) // warm: artifacts and memos built
+    probes.foreach { case (name, probe) =>
+      val jobs = jobsDuring(probe())
+      assert(jobs.isEmpty, s"constructing $name started jobs: ${jobs.map(_._3).mkString(" /// ")}")
+    }
+    // a second commit's jobs are its writes, each a SQL execution: the
+    // drift gate and the raw read-back infer no schema
+    val commitJobs = jobsDuring(Ingest.commitDocs(spark, d,
+      Seq((1100L, (0 until 20).map(j => s"fs$j").mkString(" "))).toDF("doc_id", "text")))
+    val outside = commitJobs.filter(_._2 == null)
+    assert(commitJobs.nonEmpty && outside.isEmpty,
+      s"commit jobs outside a SQL execution: ${outside.map(_._3).mkString(" /// ")}")
+  }
+
+  test("Store.parquetSparkSchema equals the inferred schema of every committed segment; a pyarrow file falls back") {
+    val d = lifecycleStore
+    val segs = IndexOverlay.effectiveEntries(d).map(_.family).distinct
+      .flatMap(IndexOverlay.segments(d, _))
+    assert(segs.exists(_.contains("/docs_raw/")) && segs.exists(_.contains("/vecs_raw/")) &&
+      segs.size >= 14, s"segments: ${segs.mkString(",")}")
+    segs.foreach { seg =>
+      assert(graft.sources.Store.parquetSparkSchema(seg).contains(spark.read.parquet(seg).schema),
+        s"footer schema of $seg")
+    }
+    val pyarrow = s"$sf/documents.parquet"
+    assert(graft.sources.Store.parquetSparkSchema(pyarrow).isEmpty)
+    assertSameRows(Tables.readStored(spark, pyarrow), spark.read.parquet(pyarrow),
+      "a file without a Spark footer read through the fallback")
+  }
+
+  test("every job commitVectors starts, on any thread, carries the caller's job group") {
+    import spark.implicits._
+    val d = lifecycleStore
+    val sc = spark.sparkContext
+    val jobs = jobsDuring {
+      sc.setJobGroup("ingest-jobgroup-test", "commitVectors")
+      try Ingest.commitVectors(spark, d, vecRows(3000L, 4, seed = 13L).toDF("vec_id", "embedding"))
+      finally sc.clearJobGroup()
+    }
+    assert(jobs.size >= 6, s"expected one write per vector family: ${jobs.map(_._3)}")
+    assert(jobs.forall(_._1 == "ingest-jobgroup-test"),
+      s"jobs outside the caller's group: ${jobs.filter(_._1 != "ingest-jobgroup-test")}")
+  }
 }
