@@ -87,7 +87,7 @@ object CorpusGen {
 
   /** Construction-time SNAPSHOT pin (ADVICE r19): one standing-view plan
     * construction consults the current generation several times — the
-    * base readers (corpusDocs / genArt) and the chain filter
+    * base readers (IndexDomain.corpus / genArt) and the chain filter
     * ([[IndexOverlay.effectiveEntriesSeq]]'s watermark) — so a promote
     * flipping between two reads on a SHARED store could yield a
     * base-OLD/chain-NEW plan that reads the folded rows from neither

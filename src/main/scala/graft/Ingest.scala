@@ -131,13 +131,13 @@ object Ingest {
     * retries, never silently drops rows) — batches sharing ids need
     * external coordination ([[IndexOverlay]] doc). */
   def commitDocs(s: SparkSession, d: String, batch: DataFrame): DataFrame =
-    operators.LlmPipeline.ingestCommitDocs(s, d, batch)
+    operators.LlmPipeline.ingestCommit(s, d, operators.LlmPipeline.Docs, batch)
 
   /** COMMIT a vector batch into the standing index — [[commitDocs]]'s
     * contract over the vector families (raw embeddings, LSH buckets,
     * quantizer cells, PQ codes). */
   def commitVectors(s: SparkSession, d: String, batch: DataFrame): DataFrame =
-    operators.LlmPipeline.ingestCommitVectors(s, d, batch)
+    operators.LlmPipeline.ingestCommit(s, d, operators.LlmPipeline.Vecs, batch)
 
   /** REPLACE (upsert) documents: make the batch's rows THE standing
     * content for their ids, in one atomic manifest — ids with different
@@ -154,12 +154,12 @@ object Ingest {
     * landing ids — superseded AND inserted, so a raced insert
     * serializes last-writer-wins like an update). */
   def replaceDocs(s: SparkSession, d: String, batch: DataFrame): DataFrame =
-    operators.LlmPipeline.ingestReplaceDocs(s, d, batch)
+    operators.LlmPipeline.ingestReplace(s, d, operators.LlmPipeline.Docs, batch)
 
   /** [[replaceDocs]] for vectors: changed embeddings re-index under
     * frozen geometry, unseen ids insert, identical embeddings no-op. */
   def replaceVectors(s: SparkSession, d: String, batch: DataFrame): DataFrame =
-    operators.LlmPipeline.ingestReplaceVectors(s, d, batch)
+    operators.LlmPipeline.ingestReplace(s, d, operators.LlmPipeline.Vecs, batch)
 
   /** DELETE (tombstone) documents from the standing index: the
     * currently-visible ids among `ids` — stored corpus rows and
@@ -177,15 +177,11 @@ object Ingest {
     * frame carrying `doc_id` — anything else fails loudly); returns the
     * commit report shape. */
   def deleteDocs(s: SparkSession, d: String, ids: DataFrame): DataFrame =
-    operators.LlmPipeline.ingestDeleteIds(s, d, ids, "doc_id",
-      operators.LlmPipeline.famDocsDeleted,
-      operators.LlmPipeline.visibleDocs(s, d).select("doc_id"))
+    operators.LlmPipeline.ingestDeleteIds(s, d, ids, operators.LlmPipeline.Docs)
 
   /** [[deleteDocs]] for vectors. */
   def deleteVectors(s: SparkSession, d: String, ids: DataFrame): DataFrame =
-    operators.LlmPipeline.ingestDeleteIds(s, d, ids, "vec_id",
-      operators.LlmPipeline.famVecsDeleted,
-      operators.LlmPipeline.visibleVecs(s, d).select("vec_id"))
+    operators.LlmPipeline.ingestDeleteIds(s, d, ids, operators.LlmPipeline.Vecs)
 
   /** COMPACT the overlay: fold every committed family's segments into
     * one holding exactly the VISIBLE rows (deleted rows and the

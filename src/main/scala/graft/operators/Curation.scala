@@ -167,7 +167,7 @@ object Curation extends QueryPack {
     sha2(lower(trim(text)), 256)
 
   /** Overlay family name of the committed (doc_id, h) rows — shared by
-    * the doc COMMIT step (LlmPipeline.commitDocFamilies) and the
+    * the doc COMMIT step (the docs derivation) and the
     * exact-dedup corpus side below. Same key as the base stage: the
     * hash recipe has no tunable geometry. */
   private[graft] val famDocHashes = "corpus_doc_hashes"
@@ -207,7 +207,7 @@ object Curation extends QueryPack {
   private[graft] def ingestExactDedup(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val b = batch.withColumn("h", contentHash(col("text")))
-    val corpusH = LlmPipeline.stdDocHashes(s, d)
+    val corpusH = LlmPipeline.standing(s, d, LlmPipeline.DocHashes)
       .join(b.select("doc_id", "h"), Seq("doc_id", "h"), "left_anti")
       .select("h").distinct()
     val w = Window.partitionBy("h").orderBy("doc_id")

@@ -436,7 +436,7 @@ object LlmPipeline extends QueryPack {
     * retrain, so no epoch artifact is ever lazily trained against a
     * LATER generation. */
   private def trainVecs(s: SparkSession, d: String): DataFrame =
-    if (GeomEpoch.epoch(d) == 0) t(s, d, "embeddings") else corpusVecs(s, d)
+    if (GeomEpoch.epoch(d) == 0) t(s, d, "embeddings") else Vecs.corpus(s, d)
 
   /** Persisted corpus vector count — the N every N-derived index dial
     * (constant-occupancy LSH bit count, batch-size gates) reads instead
@@ -1556,28 +1556,6 @@ object LlmPipeline extends QueryPack {
   // from the given frame at O(batch) cost — the corpus is never
   // rescanned, never rescored.
 
-  /** Near-dup (MinHash+LSH) ingest: batch docs (doc_id, text) vs the
-    * persisted signature index → verified (doc_a=batch, doc_b=corpus,
-    * jac ≥ 0.8) pairs. Batch shingles take the CORPUS-wide hot-shingle
-    * cap — an anti-join against the persisted [[hotShingleSet]]
-    * artifact — so batch signatures, verification intersections, and
-    * jaccard denominators all live in the same capped universe the
-    * corpus index was built in, and re-ingesting stored rows reproduces
-    * q_dedup_minhash_delta exactly (IngestSpec). */
-  /** Corpus-side reader for the INGEST paths only: base artifact ∪
-    * committed overlay segments ([[graft.IndexOverlay]]). Registered
-    * queries read the bases directly — on a never-committed dataset the
-    * two are the same plan (withOverlay returns `base` untouched), so
-    * the oracle gate and the zero-job plan-construction contract are
-    * untouched: the overlay-ABSENT cost is one driver-side directory
-    * stat. With commits on disk, plan construction adds the driver-side
-    * manifest-chain read (µs-scale file reads) and a single-file footer
-    * schema inference — never a distributed footer-merge job (ADVICE
-    * r17: the previous mergeSchema read launched one per plan; schema
-    * agreement is now enforced at append instead). */
-  private def ov(s: SparkSession, d: String, family: String, base: DataFrame): DataFrame =
-    IndexOverlay.withOverlay(s, d, family, base)
-
   /** Hard ceiling for hinting the tombstone set onto a broadcast: ids are
     * single longs (~tens of bytes each as a BHJ relation), so 2M rows is
     * well inside any executor's broadcast budget while covering every
@@ -1620,7 +1598,7 @@ object LlmPipeline extends QueryPack {
     * EARLIER manifests only (id < m) — never its own manifest's
     * co-published rows — so a row committed after a delete is visible
     * (re-insert) and an atomic same-manifest tombstone+rows publish is
-    * a replace ([[ingestReplaceDocs]]).
+    * a replace ([[ingestReplace]]).
     *
     * Shape: a family's segments read as ONE multi-path scan whose rows
     * recover their manifest id through a literal segment-name → seq map
@@ -1693,33 +1671,101 @@ object LlmPipeline extends QueryPack {
     }
   }
 
-  /** Doc-family corpus-side reader: base ∪ overlay, minus tombstoned
-    * doc ids (sequence-ordered — see [[overlayVisible]]). */
-  private[graft] def ovDoc(s: SparkSession, d: String, family: String,
-      base: DataFrame): DataFrame =
-    ovSeq(s, d, family, base, "doc_id", famDocsDeleted)
+  /** One lifecycle DOMAIN: a source table with its id and payload
+    * columns, the raw and tombstone overlay families that carry committed
+    * rows and deletes, the dedup order that picks one row per id within a
+    * batch (`keeper`), the persisted corpus count, and the batch
+    * derivation that computes every derived [[IndexFamily]] of the domain
+    * from one batch. The derivation stays one function per domain because
+    * its families share intermediates (capped shingles, PQ codes).
+    * Commit, replace, delete, compact, promote and the reports iterate
+    * [[domains]]. */
+  private[graft] final class IndexDomain(val table: String, val idCol: String,
+      val payload: String, val rawFam: String, val delFam: String, val keeper: Column,
+      val count: (SparkSession, String) => Long,
+      val derive: (SparkSession, String, DataFrame) => Seq[(IndexFamily, DataFrame)]) {
 
-  /** Vector-family corpus-side reader — `idCol` names the vector-id
-    * column in this family's shape (`vec_id`, or `nid` for the wide PQ
-    * codes). */
-  private def ovVec(s: SparkSession, d: String, family: String,
-      base: DataFrame, idCol: String = "vec_id"): DataFrame =
-    ovSeq(s, d, family, base, idCol, famVecsDeleted)
+    def hasTable(d: String): Boolean = graft.sources.Store.exists(s"$d/$table.parquet")
 
-  // ---- promoted-corpus generation plumbing (r19, [[CorpusGen]]) ----
+    /** Ingest-path corpus TABLE view: the latest promoted snapshot when
+      * one exists, else the source table's standing columns. Registered
+      * queries never read this — the oracle gate reads the source tables
+      * directly, and on a never-promoted store this IS the source table
+      * (one directory listing of overhead). */
+    def corpus(s: SparkSession, d: String): DataFrame =
+      CorpusGen.table(s, d, table).getOrElse(t(s, d, table).select(col(idCol), col(payload)))
 
-  /** Ingest-path corpus TABLE view: the latest promoted snapshot when
-    * one exists, else the source table's standing columns. Registered
-    * queries never read this — the oracle gate reads the source tables
-    * directly, and on a never-promoted store this IS the source table
-    * (one directory listing of overhead). */
-  private[graft] def corpusDocs(s: SparkSession, d: String): DataFrame =
-    CorpusGen.table(s, d, "documents").getOrElse(
-      t(s, d, "documents").select(col("doc_id"), col("text")))
+    /** The standing (id, payload) view — corpus ∪ committed raw rows,
+      * under sequence-ordered tombstones: the novelty base for commits,
+      * the change detector for replaces, the visibility guard for
+      * deletes. */
+    def visible(s: SparkSession, d: String): DataFrame =
+      CorpusGen.pinned(d) { ovSeq(s, d, rawFam, corpus(s, d), idCol, delFam) }
 
-  private[graft] def corpusVecs(s: SparkSession, d: String): DataFrame =
-    CorpusGen.table(s, d, "embeddings").getOrElse(
-      t(s, d, "embeddings").select(col("vec_id"), col("embedding")))
+    def families: Seq[IndexFamily] = indexFamilies.filter(_.dom eq this)
+
+    /** [[derive]] keyed by each family's current name; a family the
+      * derivation misses (or adds) fails here instead of silently never
+      * being committed. */
+    def deriveNamed(s: SparkSession, d: String, novel: DataFrame): Seq[(String, DataFrame)] = {
+      val out = derive(s, d, novel)
+      require(out.map(_._1) == families,
+        s"$table derivation covers ${out.map(_._1.name(s, d))}, not ${families.map(_.name(s, d))}")
+      out.map { case (f, df) => f.name(s, d) -> df }
+    }
+  }
+
+  /** One derived overlay index family. `name` is geometry-encoded
+    * exactly like the base stage key it shadows (ADVICE r16): a re-dial
+    * (new nbits, new cell size, new PQ dials) changes the family name
+    * with the base stage, so stale segments committed under old geometry
+    * simply stop being read. `idCol` is None for the SET-shaped family
+    * (the hot-shingle cap: never tombstoned, folded whole); `gen0` builds
+    * the never-promoted base artifact. */
+  private[graft] final class IndexFamily(val name: (SparkSession, String) => String,
+      val dom: IndexDomain, val idCol: Option[String],
+      val gen0: (SparkSession, String) => DataFrame)
+
+  private[graft] val Docs = new IndexDomain("documents", "doc_id", "text", "docs_raw",
+    "docs_deleted", col("text"), docCount, commitDocFamilies)
+  private[graft] val Vecs = new IndexDomain("embeddings", "vec_id", "embedding", "vecs_raw",
+    "vecs_deleted", hash(col("embedding")), embCount, commitVecFamilies)
+  private[graft] val domains = Seq(Docs, Vecs)
+
+  private[operators] val DocHashes = new IndexFamily((_, _) => Curation.famDocHashes, Docs,
+    Some("doc_id"), Curation.corpusDocHashes)
+  private val HotShingles = new IndexFamily((_, _) => s"hot_shingles_k3df$MAX_SHINGLE_DF", Docs,
+    None, hotShingleSet)
+  private val DocShingles = new IndexFamily((_, _) => s"doc_shingles_k3df$MAX_SHINGLE_DF", Docs,
+    Some("doc_id"), docShingles)
+  private val MinhashSigs = new IndexFamily(
+    (_, _) => s"minhash_sigs_k${MINHASH_K}x${MINHASH_SLICE}df$MAX_SHINGLE_DF", Docs,
+    Some("doc_id"), minhashSigs)
+  private val SubstrPostings = new IndexFamily((_, _) => s"substr_postings_w$SUBSTR_W", Docs,
+    Some("doc_id"), substrPostings)
+  /** Constant-occupancy LSH own-buckets under the FROZEN bit dial (nbits
+    * from the persisted corpus count). */
+  private val LshcOwn = new IndexFamily(
+    (s, d) => gk(d, s"lshc_own_${LSHC_TABLES}x${lshcNbits(embCount(s, d))}c$LSHC_CELL"), Vecs,
+    Some("vec_id"), (s, d) => lshcProbes(s, d).where(col("own"))
+      .select(col("vec_id"), col("tb"), col("bucket")))
+  private val LshMulti = new IndexFamily(
+    (_, _) => s"lsh_multi_${LSH_TABLES}x${LSH_TABLE_BITS}o$LSH_PLANES", Vecs,
+    Some("vec_id"), lshMultiBuckets)
+  private val SemAssign = new IndexFamily((_, d) => gk(d, s"sem2_assign_nc$SEM_CELL"), Vecs,
+    Some("vec_id"), semAssign(_, _))
+  private val SemAssign2 = new IndexFamily((_, d) => gk(d, s"sem2_assign_top2_nc$SEM_CELL"), Vecs,
+    Some("vec_id"), semAssign2(_, _))
+  private val IvfkAssign2 = new IndexFamily((_, d) => gk(d, "ivfk_assign2_top2"), Vecs,
+    Some("vec_id"), ivfKAssign2)
+  /** PQ nibble codes, one wide row per vector keyed `nid`. */
+  private val PqCodesWide = new IndexFamily(
+    (_, d) => gk(d, s"pq_codes_wide_m${PQ_M}k${PQ_K}_lloyd$PQ_LLOYD"), Vecs,
+    Some("nid"), pqCodesWide)
+
+  private[graft] val indexFamilies: Seq[IndexFamily] = Seq(DocHashes, HotShingles,
+    DocShingles, MinhashSigs, SubstrPostings, LshcOwn, LshMulti, SemAssign, SemAssign2,
+    IvfkAssign2, PqCodesWide)
 
   /** Gen-aware BASE artifact of an ingest family: the promoted artifact
     * when the current generation carries it; identity (the gen-0
@@ -1731,90 +1777,54 @@ object LlmPipeline extends QueryPack {
     * committed-then-promoted rows stay missing from this family until
     * the next [[ingestPromote]] heals it. */
   private def genArt(s: SparkSession, d: String, family: String,
-      idCol: String, table: String, tableIdCol: String)(
-      gen0: => DataFrame): DataFrame =
+      idCol: String, dom: IndexDomain)(gen0: => DataFrame): DataFrame =
     CorpusGen.artifact(s, d, family).getOrElse {
-      CorpusGen.table(s, d, table) match {
+      CorpusGen.table(s, d, dom.table) match {
         case Some(snap) =>
-          gen0.join(snap.select(col(tableIdCol).as(idCol)), Seq(idCol), "left_semi")
+          gen0.join(snap.select(col(dom.idCol).as(idCol)), Seq(idCol), "left_semi")
         case None => gen0
       }
     }
 
+  /** The STANDING corpus-side view of an index family — gen-aware base
+    * (promoted artifact, else gen-0) ∪ visible overlay rows under the
+    * chain's sequence-ordered tombstones (the set-shaped family has no
+    * tombstones: base ∪ overlay). This is what every ingest probe reads
+    * corpus-side AND what [[ingestPromote]] folds into the next
+    * generation (the fold is by construction exactly the view, so
+    * promotion is probe-invariant). Registered queries read the bases
+    * directly; on a never-committed, never-promoted store the view IS
+    * the base plan. Each view pins ONE generation snapshot for its whole
+    * construction ([[CorpusGen.pinned]], ADVICE r19): the gen-aware base
+    * and the chain's watermark filter must read the SAME generation, or
+    * a promote flipping between the two reads yields a base-old/chain-new
+    * plan missing every folded row. */
+  private[operators] def standing(s: SparkSession, d: String, f: IndexFamily): DataFrame =
+    CorpusGen.pinned(d) {
+      val fam = f.name(s, d)
+      f.idCol match {
+        case Some(id) =>
+          ovSeq(s, d, fam, genArt(s, d, fam, id, f.dom)(f.gen0(s, d)), id, f.dom.delFam)
+        case None => IndexOverlay.withOverlay(s, d, fam,
+          CorpusGen.artifact(s, d, fam).getOrElse(f.gen0(s, d)))
+      }
+    }
+
+  // Names the specs read directly.
+  private[graft] def visibleDocs(s: SparkSession, d: String): DataFrame = Docs.visible(s, d)
+  private[graft] def visibleVecs(s: SparkSession, d: String): DataFrame = Vecs.visible(s, d)
+  private[graft] def famVecsDeleted: String = Vecs.delFam
   private[graft] def genArtDoc(s: SparkSession, d: String, family: String)(
-      gen0: => DataFrame): DataFrame =
-    genArt(s, d, family, "doc_id", "documents", "doc_id")(gen0)
+      gen0: => DataFrame): DataFrame = genArt(s, d, family, Docs.idCol, Docs)(gen0)
 
-  private def genArtVec(s: SparkSession, d: String, family: String,
-      idCol: String = "vec_id")(gen0: => DataFrame): DataFrame =
-    genArt(s, d, family, idCol, "embeddings", "vec_id")(gen0)
-
-  // The STANDING corpus-side view per index family — gen-aware base
-  // (promoted artifact, else gen-0) ∪ visible overlay rows under the
-  // chain's sequence-ordered tombstones. These are what every ingest
-  // probe reads corpus-side AND what [[ingestPromote]] folds into the
-  // next generation (the fold is by construction exactly the view, so
-  // promotion is probe-invariant). Each view pins ONE generation
-  // snapshot for its whole construction ([[CorpusGen.pinned]], ADVICE
-  // r19): the gen-aware base and the chain's watermark filter must read
-  // the SAME generation, or a promote flipping between the two reads
-  // yields a base-old/chain-new plan missing every folded row.
-  private[operators] def stdDocHashes(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovDoc(s, d, Curation.famDocHashes,
-      genArtDoc(s, d, Curation.famDocHashes)(Curation.corpusDocHashes(s, d))) }
-  private def stdHotShingles(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ov(s, d, famHotShingles,
-      CorpusGen.artifact(s, d, famHotShingles).getOrElse(hotShingleSet(s, d))) }
-  private def stdDocShingles(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovDoc(s, d, famDocShingles,
-      genArtDoc(s, d, famDocShingles)(docShingles(s, d))) }
-  private def stdMinhashSigs(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovDoc(s, d, famMinhashSigs,
-      genArtDoc(s, d, famMinhashSigs)(minhashSigs(s, d))) }
-  private def stdSubstrPostings(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovDoc(s, d, famSubstrPostings,
-      genArtDoc(s, d, famSubstrPostings)(substrPostings(s, d))) }
-  private def stdLshcOwn(s: SparkSession, d: String, nbits: Int): DataFrame =
-    CorpusGen.pinned(d) { ovVec(s, d, famLshcOwn(d, nbits),
-      genArtVec(s, d, famLshcOwn(d, nbits))(lshcProbes(s, d).where(col("own"))
-        .select(col("vec_id"), col("tb"), col("bucket")))) }
-  private def stdLshMulti(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovVec(s, d, famLshMulti,
-      genArtVec(s, d, famLshMulti)(lshMultiBuckets(s, d))) }
-  private def stdSemAssign(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovVec(s, d, famSemAssign(d),
-      genArtVec(s, d, famSemAssign(d))(semAssign(s, d))) }
-  private def stdSemAssign2(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovVec(s, d, famSemAssign2(d),
-      genArtVec(s, d, famSemAssign2(d))(semAssign2(s, d))) }
-  private def stdIvfkAssign2(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovVec(s, d, famIvfkAssign2(d),
-      genArtVec(s, d, famIvfkAssign2(d))(ivfKAssign2(s, d))) }
-  private def stdPqCodesWide(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovVec(s, d, famPqCodesWide(d),
-      genArtVec(s, d, famPqCodesWide(d), "nid")(pqCodesWide(s, d)), "nid") }
-
-  // Overlay FAMILY names — geometry-encoded exactly like the base stage
-  // keys they shadow (ADVICE r16): a re-dial (new nbits, new cell size,
-  // new PQ dials) changes the family name with the base stage, so stale
-  // segments committed under old geometry simply stop being read.
-  private[graft] def famDocsRaw = "docs_raw"
-  private[graft] def famVecsRaw = "vecs_raw"
-  private[graft] def famDocsDeleted = "docs_deleted"
-  private[graft] def famVecsDeleted = "vecs_deleted"
-  private def famHotShingles = s"hot_shingles_k3df$MAX_SHINGLE_DF"
-  private def famDocShingles = s"doc_shingles_k3df$MAX_SHINGLE_DF"
-  private def famMinhashSigs = s"minhash_sigs_k${MINHASH_K}x${MINHASH_SLICE}df$MAX_SHINGLE_DF"
-  private def famSubstrPostings = s"substr_postings_w$SUBSTR_W"
-  private def famLshcOwn(d: String, nbits: Int) =
-    gk(d, s"lshc_own_${LSHC_TABLES}x${nbits}c$LSHC_CELL")
-  private def famLshMulti = s"lsh_multi_${LSH_TABLES}x${LSH_TABLE_BITS}o$LSH_PLANES"
-  private def famSemAssign(d: String) = gk(d, s"sem2_assign_nc$SEM_CELL")
-  private def famSemAssign2(d: String) = gk(d, s"sem2_assign_top2_nc$SEM_CELL")
-  private def famIvfkAssign2(d: String) = gk(d, "ivfk_assign2_top2")
-  private def famPqCodesWide(d: String) =
-    gk(d, s"pq_codes_wide_m${PQ_M}k${PQ_K}_lloyd$PQ_LLOYD")
-
+  /** Near-dup (MinHash+LSH) ingest: batch docs (doc_id, text) vs the
+    * persisted signature index → verified (doc_a=batch, doc_b=corpus,
+    * jac ≥ 0.8) pairs. Batch shingles take the CORPUS-wide hot-shingle
+    * cap — an anti-join against the persisted [[hotShingleSet]]
+    * artifact — so batch signatures, verification intersections, and
+    * jaccard denominators all live in the same capped universe the
+    * corpus index was built in, and re-ingesting stored rows reproduces
+    * q_dedup_minhash_delta exactly (IngestSpec). */
   private[graft] def ingestMinhashDedup(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val bids = batch.select("doc_id")
@@ -1838,19 +1848,19 @@ object LlmPipeline extends QueryPack {
     // commit capped in, and boilerplate that arrived via commit cannot
     // re-enter later batches' signatures
     val bsh = bshRaw
-      .join(maybeBroadcast(stdHotShingles(s, d)),
+      .join(maybeBroadcast(standing(s, d, HotShingles)),
         Seq("shingle"), "left_anti")
       .join(maybeBroadcast(batchHot), Seq("shingle"), "left_anti")
     val aggs = minhashSigAggs
     val batchBands = minhashBands(bsh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*))
     val corpusBands = minhashBands(
-      stdMinhashSigs(s, d).join(bids, Seq("doc_id"), "left_anti"))
+      standing(s, d, MinhashSigs).join(bids, Seq("doc_id"), "left_anti"))
     val cands = batchBands.as("ba")
       .join(maybeBroadcast(corpusBands.as("bb")), col("ba.band") === col("bb.band") &&
         col("ba.bucket") === col("bb.bucket"))
       .select(col("ba.doc_id").as("doc_a"), col("bb.doc_id").as("doc_b"))
       .distinct()
-    val csh = stdDocShingles(s, d)
+    val csh = standing(s, d, DocShingles)
       .join(bids, Seq("doc_id"), "left_anti")
     val withA = bsh.join(maybeBroadcast(cands), col("doc_id") === col("doc_a"))
       .select(col("doc_a"), col("doc_b"), col("shingle"))
@@ -1889,7 +1899,7 @@ object LlmPipeline extends QueryPack {
     // the standing hot set includes committed batches' novel hot
     // shingles (overlay), so committed boilerplate no longer reads as
     // lag — the residual lag is what only the next FULL rebuild learns
-    val standingHot = stdHotShingles(s, d)
+    val standingHot = standing(s, d, HotShingles)
     val lag = bhot.join(maybeBroadcast(standingHot), Seq("shingle"), "left_anti")
     val hotAgg = bhot.agg(count(lit(1)).as("n_batch_hot"))
     val lagAgg = lag.agg(count(lit(1)).as("n_lagging"),
@@ -1910,7 +1920,7 @@ object LlmPipeline extends QueryPack {
     val bids = batch.select("doc_id")
     val bposts = substrGramsPlan(batch.select(col("doc_id"), col("text"))
       .repartition(col("doc_id")))
-    val corpusGh = stdSubstrPostings(s, d)
+    val corpusGh = standing(s, d, SubstrPostings)
       .join(bids, Seq("doc_id"), "left_anti")
       .select("gh").distinct()
     substrSpanStats(bposts.join(corpusGh, "gh"))
@@ -1922,9 +1932,9 @@ object LlmPipeline extends QueryPack {
   private[graft] def ingestSemanticDedup(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val b = batch.select(col("vec_id"), col("embedding"))
-    val corpus = visibleVecs(s, d)
+    val corpus = Vecs.visible(s, d)
       .join(b.select("vec_id"), Seq("vec_id"), "left_anti")
-      .join(maybeBroadcast(stdSemAssign(s, d)), "vec_id")
+      .join(maybeBroadcast(standing(s, d, SemAssign)), "vec_id")
       .select(col("vec_id"), col("cell"), col("embedding"))
     semanticVerdicts(s, d, b, corpus).orderBy("vec_id")
   }
@@ -2024,8 +2034,8 @@ object LlmPipeline extends QueryPack {
     val ids = b.select("vec_id")
     annSearch(tier, AnnFace.Facade, tier.probesFor(s, d, b),
       tier.stdPostings(s, d).join(ids, Seq("vec_id"), "left_anti"),
-      b, visibleVecs(s, d).join(ids, Seq("vec_id"), "left_anti"),
-      stdPqCodesWide(s, d).join(b.select(col("vec_id").as("nid")), Seq("nid"), "left_anti"),
+      b, Vecs.visible(s, d).join(ids, Seq("vec_id"), "left_anti"),
+      standing(s, d, PqCodesWide).join(b.select(col("vec_id").as("nid")), Seq("nid"), "left_anti"),
       // an arbitrary facade batch can exceed the broadcast budget:
       // oversized tables degrade to shuffled joins
       pqBatchDtable(s, d, b, estBatchRows(b)))
@@ -2033,16 +2043,14 @@ object LlmPipeline extends QueryPack {
 
   /** Multi-table LSH (dial tier; [[lshcTier]] is the LSH scale pick). */
   private val lshTier = AnnTier(lshMultiBuckets, (_, _, e) => lshMultiBucketsPlan(e),
-    lshMultiBuckets, stdLshMulti, Seq("tb", "bucket"), pq = false,
+    lshMultiBuckets, standing(_, _, LshMulti), Seq("tb", "bucket"), pq = false,
     spread = Set(AnnFace.Registry, AnnFace.Delta))
 
   /** Constant-occupancy LSH: probes and own-bucket postings under the
     * FROZEN geometry (nbits from the persisted corpus count). */
   private val lshcTier = AnnTier(lshcProbes,
     (s, d, e) => lshcProbesPlan(e, lshcNbits(embCount(s, d))),
-    (s, d) => lshcProbes(s, d).where(col("own"))
-      .select(col("vec_id"), col("tb"), col("bucket")),
-    (s, d) => stdLshcOwn(s, d, lshcNbits(embCount(s, d))),
+    LshcOwn.gen0, standing(_, _, LshcOwn),
     Seq("tb", "bucket"), pq = false, spread = AnnFace.values)
 
   /** Trained-k IVF: probe cells ranked against the frozen centroids
@@ -2050,14 +2058,14 @@ object LlmPipeline extends QueryPack {
   private val ivfKTier = AnnTier(ivfKProbes,
     (s, d, e) => ivfKCellsFor(e, ivfKCentroids(s, d),
       2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt),
-    ivfKAssign2, stdIvfkAssign2, Seq("cell"), pq = false,
+    ivfKAssign2, standing(_, _, IvfkAssign2), Seq("cell"), pq = false,
     spread = Set(AnnFace.Registry))
 
   /** Constant-cell IVF (the 100 TB scale pick): probes against the
     * frozen two-level quantizer, postings its top-2 corpus assignment. */
   private val ivfcTier = AnnTier(ivfcProbes, ivfcProbesFor,
     (s, d) => semAssign2(s, d).select(col("vec_id"), col("cell")),
-    (s, d) => stdSemAssign2(s, d).select(col("vec_id"), col("cell")),
+    (s, d) => standing(s, d, SemAssign2).select(col("vec_id"), col("cell")),
     Seq("cell"), pq = false, spread = Set.empty)
 
   private val ivfPqTier = ivfKTier.copy(pq = true,
@@ -2098,25 +2106,25 @@ object LlmPipeline extends QueryPack {
     *    batch's hot set anti-joined out).
     *  - minhash_sigs: signatures over that capped universe.
     *  - substr_postings: width-[[SUBSTR_W]] window hashes. */
-  private[graft] def commitDocFamilies(s: SparkSession, d: String,
-      novel: DataFrame): Seq[(String, DataFrame)] = {
+  private def commitDocFamilies(s: SparkSession, d: String,
+      novel: DataFrame): Seq[(IndexFamily, DataFrame)] = {
     val docs = novel.select(col("doc_id"), col("text")).repartition(col("doc_id"))
     val bshRaw = rawShingles(docs, k = 3)
     val batchHot = shingleDfs(bshRaw)
       .where(col("df") > MAX_SHINGLE_DF).select("shingle")
-    val standingHot = stdHotShingles(s, d)
+    val standingHot = standing(s, d, HotShingles)
     val bsh = bshRaw
       .join(maybeBroadcast(standingHot), Seq("shingle"), "left_anti")
       .join(maybeBroadcast(batchHot), Seq("shingle"), "left_anti")
     val aggs = minhashSigAggs
     Seq(
-      Curation.famDocHashes -> docs.select(col("doc_id"),
+      DocHashes -> docs.select(col("doc_id"),
         Curation.contentHash(col("text")).as("h")),
-      famHotShingles -> batchHot
+      HotShingles -> batchHot
         .join(maybeBroadcast(standingHot), Seq("shingle"), "left_anti"),
-      famDocShingles -> bsh,
-      famMinhashSigs -> bsh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*),
-      famSubstrPostings -> substrGramsPlan(docs))
+      DocShingles -> bsh,
+      MinhashSigs -> bsh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*),
+      SubstrPostings -> substrGramsPlan(docs))
   }
 
   /** Overlay rows a VECTOR commit appends per index family
@@ -2127,8 +2135,8 @@ object LlmPipeline extends QueryPack {
     * two-level quantizer cells, trained-k IVF top-2 cells, and PQ nibble
     * codes against the frozen codebooks. O(batch) each; the corpus-side
     * artifacts are never touched. */
-  private[graft] def commitVecFamilies(s: SparkSession, d: String,
-      novel: DataFrame): Seq[(String, DataFrame)] = {
+  private def commitVecFamilies(s: SparkSession, d: String,
+      novel: DataFrame): Seq[(IndexFamily, DataFrame)] = {
     val b = novel.select(col("vec_id"), col("embedding"))
     val cb = pqCodebooks(s, d)
     val sd = pqSubvectors(b).join(broadcast(cb), "m")
@@ -2144,78 +2152,69 @@ object LlmPipeline extends QueryPack {
       .select(col("nid") +: (0 until PQ_M).map(m => col(s"$m").as(s"c_$m")): _*)
     val nbits = lshcNbits(embCount(s, d))
     Seq(
-      famLshcOwn(d, nbits) -> lshcProbesPlan(b, nbits)
+      LshcOwn -> lshcProbesPlan(b, nbits)
         .where(col("own")).select(col("vec_id"), col("tb"), col("bucket")),
-      famLshMulti -> lshMultiBucketsPlan(b),
-      famSemAssign(d) -> semCellsFor(s, d, b),
-      famSemAssign2(d) -> semAssign2For(s, d, b),
-      famIvfkAssign2(d) -> ivfKCellsFor(b, ivfKCentroids(s, d), 2),
-      famPqCodesWide(d) -> codesWide)
+      LshMulti -> lshMultiBucketsPlan(b),
+      SemAssign -> semCellsFor(s, d, b),
+      SemAssign2 -> semAssign2For(s, d, b),
+      IvfkAssign2 -> ivfKCellsFor(b, ivfKCentroids(s, d), 2),
+      PqCodesWide -> codesWide)
   }
 
-  /** COMMIT step of the doc-ingest lifecycle ([[graft.Ingest.commitDocs]]):
-    * make the batch's id-novel rows part of the standing corpus for every
-    * LATER ingest call, at O(batch) cost, by appending overlay segments
+  /** COMMIT step of the ingest lifecycle ([[graft.Ingest.commitDocs]],
+    * [[graft.Ingest.commitVectors]]): make the batch's id-novel rows part
+    * of the standing corpus for every LATER ingest call, at O(batch)
+    * cost, by appending overlay segments
     * ([[graft.IndexOverlay]]) — the raw rows first (published atomically,
     * then re-read so every derived family is computed from the same
-    * deterministic parquet), then one segment per doc index family under
-    * frozen geometry ([[commitDocFamilies]]).
+    * deterministic parquet), then one segment per index family of the
+    * domain under frozen geometry ([[IndexDomain.derive]]).
     *
     * EAGER — a commit is an ACTION with side effects, not a query
     * builder; it runs Spark jobs (one write per family — the raw write
     * IS the novelty check's execution, VERDICT r17: no separate isEmpty
     * pre-job re-running the anti-join). Id-novelty is judged against
     * the ids currently VISIBLE (corpus ∪ committed − seq-effective
-    * tombstones, [[visibleDocs]]): re-committing any batch is a no-op
-    * (idempotent), a commit never changes a standing row's content
-    * (that is [[ingestReplaceDocs]]'s verb), and committing a DELETED
+    * tombstones, [[IndexDomain.visible]]): re-committing any batch is a
+    * no-op (idempotent), a commit never changes a standing row's content
+    * (that is [[ingestReplace]]'s verb), and committing a DELETED
     * id re-inserts it — the new segment's manifest is later than the
     * tombstone's, so the row simply wins (r18 seq semantics; before,
     * tombstones were permanent until compaction). Batch-internal id
-    * duplicates collapse deterministically to the min-text row (an id
-    * names ONE visible row in the standing index). CRASH-ATOMIC across
-    * families (ADVICE r17): every family segment is appended invisibly
-    * first and ONE manifest publish flips them all visible — a crash
+    * duplicates collapse deterministically to the first row in the
+    * domain's `keeper` order — the min-text doc, the vector whose
+    * embedding hashes lowest (an id names ONE visible row in the
+    * standing index). CRASH-ATOMIC across families (ADVICE r17): every
+    * family segment is appended invisibly first and ONE manifest
+    * publish flips them all visible — a crash
     * mid-commit leaves only orphan dirs (GC'd by [[ingestCompact]]),
     * the ids still read as novel, and an at-least-once replay
     * re-commits the batch in full. Returns the (family, segment,
     * n_rows) report of what is actually on disk — empty when nothing
     * was novel. */
-  private[graft] def ingestCommitDocs(s: SparkSession, d: String,
+  private[graft] def ingestCommit(s: SparkSession, d: String, dom: IndexDomain,
       batch: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("text")
-    val novel = batch.select(col("doc_id"), col("text"))
-      .join(visibleDocs(s, d).select("doc_id"), Seq("doc_id"), "left_anti")
+      .partitionBy(dom.idCol).orderBy(dom.keeper)
+    val novel = batch.select(col(dom.idCol), col(dom.payload))
+      .join(dom.visible(s, d).select(dom.idCol), Seq(dom.idCol), "left_anti")
       .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
-    publishCommit(s, d, famDocsRaw, novel, commitDocFamilies(s, d, _))
+    publishCommit(s, d, dom, novel)
   }
-
-  /** The standing index's current (doc_id, text) view — corpus ∪
-    * committed raw rows, under sequence-ordered tombstones: the novelty
-    * base for commits, the change detector for replaces, the
-    * visibility guard for deletes. */
-  private[graft] def visibleDocs(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovDoc(s, d, famDocsRaw, corpusDocs(s, d)) }
-
-  /** [[visibleDocs]] for vectors: the standing (vec_id, embedding). */
-  private[graft] def visibleVecs(s: SparkSession, d: String): DataFrame =
-    CorpusGen.pinned(d) { ovVec(s, d, famVecsRaw, corpusVecs(s, d)) }
 
   /** Shared publish tail of the commit verbs: append `novel` as the raw
     * family's segment (the write IS the emptiness check), derive every
     * index family from the published parquet and append them together
     * ([[IndexOverlay.appendAll]]), and flip them all visible through ONE
     * manifest — all-or-nothing for readers and the novelty base. */
-  private def publishCommit(s: SparkSession, d: String, rawFam: String,
-      novel: DataFrame,
-      derive: DataFrame => Seq[(String, DataFrame)]): DataFrame = {
-    val (rawPath, nRaw) = IndexOverlay.append(s, d, rawFam, novel)
+  private def publishCommit(s: SparkSession, d: String, dom: IndexDomain,
+      novel: DataFrame): DataFrame = {
+    val (rawPath, nRaw) = IndexOverlay.append(s, d, dom.rawFam, novel)
     commitReport(s,
       if (nRaw == 0L) { IndexOverlay.discardSegment(rawPath); Seq.empty }
       else {
-        val segs = (rawFam, rawPath, nRaw) +: nonEmptySegs(
-          IndexOverlay.appendAll(s, d, derive(Tables.readStored(s, rawPath))))
+        val segs = (dom.rawFam, rawPath, nRaw) +: nonEmptySegs(IndexOverlay.appendAll(s, d,
+          dom.deriveNamed(s, d, Tables.readStored(s, rawPath))))
         IndexOverlay.publishManifest(s, d, segs, full = false)
         segs
       })
@@ -2231,9 +2230,10 @@ object LlmPipeline extends QueryPack {
     kept
   }
 
-  /** REPLACE (upsert) step of the doc-ingest lifecycle
-    * ([[graft.Ingest.replaceDocs]]): make the batch's rows THE standing
-    * content for their ids — changed ids swap content, unseen ids
+  /** REPLACE (upsert) step of the ingest lifecycle
+    * ([[graft.Ingest.replaceDocs]], [[graft.Ingest.replaceVectors]]):
+    * make the batch's rows THE standing content for their ids —
+    * changed ids swap content, unseen ids
     * insert, unchanged ids are a no-op — in ONE atomic manifest. The
     * mechanism is the manifest chain's sequence rule: the old rows (base
     * or earlier-manifest overlay rows, in the raw family and every
@@ -2246,39 +2246,20 @@ object LlmPipeline extends QueryPack {
     * parquet is never touched). Idempotent: replaying a replace finds
     * every id already visible with identical content and publishes
     * nothing. Returns the commit report; the tombstone family's row
-    * counts what was superseded. */
-  private[graft] def ingestReplaceDocs(s: SparkSession, d: String,
+    * counts what was superseded. A changed embedding re-derives every
+    * ANN/dedup family of the id under frozen geometry. */
+  private[graft] def ingestReplace(s: SparkSession, d: String, dom: IndexDomain,
       batch: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("text")
-    val b = batch.select(col("doc_id"), col("text"))
+      .partitionBy(dom.idCol).orderBy(dom.keeper)
+    val b = batch.select(col(dom.idCol), col(dom.payload))
       .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
-    val cur = visibleDocs(s, d).withColumnRenamed("text", "cur_text")
-    val cls = b.join(cur, Seq("doc_id"), "left")
-      .where(col("cur_text").isNull || !(col("text") <=> col("cur_text")))
-      .select(col("doc_id"), col("text"), col("cur_text").isNotNull.as("was_visible"))
-    replaceVia(s, d, famDocsRaw, famDocsDeleted, "doc_id", cls,
-      commitDocFamilies(s, d, _))
-  }
-
-  /** [[ingestReplaceDocs]] for vectors ([[graft.Ingest.replaceVectors]]):
-    * changed embeddings swap (every ANN/dedup family re-derives the id
-    * under frozen geometry), unseen ids insert, identical embeddings
-    * no-op. */
-  private[graft] def ingestReplaceVectors(s: SparkSession, d: String,
-      batch: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(hash(col("embedding")))
-    val b = batch.select(col("vec_id"), col("embedding"))
-      .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
-    val cur = visibleVecs(s, d).withColumnRenamed("embedding", "cur_embedding")
-    val cls = b.join(cur, Seq("vec_id"), "left")
-      .where(col("cur_embedding").isNull ||
-        !(col("embedding") <=> col("cur_embedding")))
-      .select(col("vec_id"), col("embedding"),
-        col("cur_embedding").isNotNull.as("was_visible"))
-    replaceVia(s, d, famVecsRaw, famVecsDeleted, "vec_id", cls,
-      commitVecFamilies(s, d, _))
+    val curCol = s"cur_${dom.payload}"
+    val cur = dom.visible(s, d).withColumnRenamed(dom.payload, curCol)
+    val cls = b.join(cur, Seq(dom.idCol), "left")
+      .where(col(curCol).isNull || !(col(dom.payload) <=> col(curCol)))
+      .select(col(dom.idCol), col(dom.payload), col(curCol).isNotNull.as("was_visible"))
+    replaceVia(s, d, dom, cls)
   }
 
   /** Replace tail. `cls` is the change CLASSIFICATION — the batch's
@@ -2304,37 +2285,22 @@ object LlmPipeline extends QueryPack {
     * only manifests older than its own — so tombstoning the whole
     * landing set makes the insert race last-writer-wins exactly like
     * the update race, at the cost of a few extra id rows per publish. */
-  private def replaceVia(s: SparkSession, d: String, rawFam: String,
-      delFam: String, idCol: String, cls: DataFrame,
-      derive: DataFrame => Seq[(String, DataFrame)]): DataFrame = {
+  private def replaceVia(s: SparkSession, d: String, dom: IndexDomain,
+      cls: DataFrame): DataFrame = {
     val pinned = cls.localCheckpoint() // eager: the one visibility pass
-    val (rawPath, nRaw) = IndexOverlay.append(s, d, rawFam,
+    val (rawPath, nRaw) = IndexOverlay.append(s, d, dom.rawFam,
       pinned.drop("was_visible"))
     if (nRaw == 0L) {
       IndexOverlay.discardSegment(rawPath)
       return commitReport(s, Seq.empty)
     }
     val (tomb, fams) = nonEmptySegs(IndexOverlay.appendAll(s, d,
-      (delFam -> pinned.select(idCol)) +: derive(Tables.readStored(s, rawPath))))
-      .partition(_._1 == delFam)
-    val segs = tomb ++ ((rawFam, rawPath, nRaw) +: fams)
+      (dom.delFam -> pinned.select(dom.idCol)) +:
+        dom.deriveNamed(s, d, Tables.readStored(s, rawPath))))
+      .partition(_._1 == dom.delFam)
+    val segs = tomb ++ ((dom.rawFam, rawPath, nRaw) +: fams)
     IndexOverlay.publishManifest(s, d, segs, full = false)
     commitReport(s, segs)
-  }
-
-  /** COMMIT step of the vector-ingest lifecycle
-    * ([[graft.Ingest.commitVectors]]) — [[ingestCommitDocs]]'s contract
-    * over the vector families ([[commitVecFamilies]]). Batch-internal id
-    * duplicates collapse deterministically to the row whose embedding
-    * hashes lowest. */
-  private[graft] def ingestCommitVectors(s: SparkSession, d: String,
-      batch: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(hash(col("embedding")))
-    val novel = batch.select(col("vec_id"), col("embedding"))
-      .join(visibleVecs(s, d).select("vec_id"), Seq("vec_id"), "left_anti")
-      .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
-    publishCommit(s, d, famVecsRaw, novel, commitVecFamilies(s, d, _))
   }
 
   private def commitReport(s: SparkSession,
@@ -2360,8 +2326,8 @@ object LlmPipeline extends QueryPack {
     * deletes (a cap can only be conservative; the next rebuild
     * re-derives it). EAGER; returns the commit report shape. */
   private[graft] def ingestDeleteIds(s: SparkSession, d: String,
-      ids: DataFrame, idCol: String, delFam: String,
-      visibleIds: DataFrame): DataFrame = {
+      ids: DataFrame, dom: IndexDomain): DataFrame = {
+    val idCol = dom.idCol
     // take the expected id column when present; otherwise demand an
     // unambiguous 1-column frame — silently tombstoning whatever column
     // happened to be first would retire WRONG ids until the next
@@ -2374,11 +2340,12 @@ object LlmPipeline extends QueryPack {
             s"got (${ids.columns.mkString(", ")})")
         ids.select(col(ids.columns.head).as(idCol))
       }
-    val fresh = idsSel.distinct().join(visibleIds, Seq(idCol), "left_semi")
+    val fresh = idsSel.distinct()
+      .join(dom.visible(s, d).select(idCol), Seq(idCol), "left_semi")
     // the write is the emptiness check (one execution of the dedup plan);
     // appendCommitted publishes the 1-entry manifest only for live ids
-    val (p, n) = IndexOverlay.appendCommitted(s, d, delFam, fresh)
-    commitReport(s, if (n == 0L) Seq.empty else Seq((delFam, p, n)))
+    val (p, n) = IndexOverlay.appendCommitted(s, d, dom.delFam, fresh)
+    commitReport(s, if (n == 0L) Seq.empty else Seq((dom.delFam, p, n)))
   }
 
   /** Overlay observability ([[graft.Ingest.overlayReport]]) — the
@@ -2401,16 +2368,9 @@ object LlmPipeline extends QueryPack {
     * per-family count jobs and the per-call corpus count are gone). */
   private[graft] def ingestOverlayReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val hasDocs = graft.sources.Store.exists(s"$d/documents.parquet")
-    val hasVecs = graft.sources.Store.exists(s"$d/embeddings.parquet")
-    val current: Set[String] =
-      (if (hasDocs) Set(famDocsRaw, famDocsDeleted, Curation.famDocHashes,
-        famHotShingles, famDocShingles, famMinhashSigs, famSubstrPostings)
-       else Set.empty[String]) ++
-      (if (hasVecs) Set(famVecsRaw, famVecsDeleted,
-        famLshcOwn(d, lshcNbits(embCount(s, d))),
-        famLshMulti, famSemAssign(d), famSemAssign2(d), famIvfkAssign2(d),
-        famPqCodesWide(d)) else Set.empty[String])
+    val doms = domains.filter(_.hasTable(d))
+    val current: Set[String] = doms.flatMap(dom =>
+      dom.rawFam +: dom.delFam +: dom.families.map(_.name(s, d))).toSet
     val eff = IndexOverlay.effectiveEntries(d).groupBy(_.family)
     val rows = IndexOverlay.families(d).map { fam =>
       val es = eff.getOrElse(fam, Seq.empty)
@@ -2420,12 +2380,8 @@ object LlmPipeline extends QueryPack {
       // current-generation snapshot size when promoted (from the gen
       // meta — still zero jobs); the frozen gen-0 count otherwise
       val gen = CorpusGen.current(d)
-      val corpusRows: Option[Long] =
-        if (fam == famDocsRaw && hasDocs)
-          Some(gen.flatMap(_.tableRows.get("documents")).getOrElse(docCount(s, d)))
-        else if (fam == famVecsRaw && hasVecs)
-          Some(gen.flatMap(_.tableRows.get("embeddings")).getOrElse(embCount(s, d)))
-        else None
+      val corpusRows: Option[Long] = doms.find(_.rawFam == fam).map(dom =>
+        gen.flatMap(_.tableRows.get(dom.table)).getOrElse(dom.count(s, d)))
       (fam, current.contains(fam), es.size, es.map(_.rows).sum, orphans, corpusRows)
     }
     rows.toDF("family", "live", "n_segments", "n_rows",
@@ -2435,8 +2391,8 @@ object LlmPipeline extends QueryPack {
 
   /** COMPACT the overlay ([[graft.Ingest.compact]]) — the fold-back
     * quarter of the lifecycle (VERDICT r17): bound per-probe cost (every
-    * `ov()` read unions every manifested segment, every append attempt
-    * lists them) without the O(corpus) regeneration. Per family, all
+    * standing-view read unions every manifested segment, every append
+    * attempt lists them) without the O(corpus) regeneration. Per family, all
     * effective segments coalesce into ONE holding exactly the VISIBLE
     * rows under the chain's sequence rule — deleted rows and the
     * superseded copies behind a replace/re-insert physically leave
@@ -2481,21 +2437,22 @@ object LlmPipeline extends QueryPack {
       IndexOverlay.gc(d, retainMillis)
       return commitCompactReport(s, Seq.empty)
     }
-    val delDoc = IndexOverlay.read(s, d, famDocsDeleted)
-      .map(df => df.select(col("doc_id")).distinct())
-    val delVec = IndexOverlay.read(s, d, famVecsDeleted)
-      .map(df => df.select(col("vec_id")).distinct())
-    val tombFams = Set(famDocsDeleted, famVecsDeleted)
+    val dels = domains.flatMap(dom => IndexOverlay.read(s, d, dom.delFam)
+      .map(df => dom -> df.select(col(dom.idCol)).distinct()))
+    val tombFams = domains.map(_.delFam).toSet
     val dataFolds = eff.keys.filterNot(tombFams).toSeq.sorted.map { fam =>
       // the fold keeps exactly the VISIBLE rows under the chain's
       // sequence rule — a replaced/re-inserted id keeps its newest row
       // (an all-tombstone anti-join would drop it), the superseded
       // copies and deleted rows leave disk; distinct() is identity on a
-      // well-formed overlay and the healer for crash/race duplicates
+      // well-formed overlay and the healer for crash/race duplicates.
+      // The id column and domain come from the segment's COLUMN SET, not
+      // from [[indexFamilies]]: a family stranded by a re-dial has an
+      // old-geometry name no live family describes, and must still fold.
       val cols = IndexOverlay.read(s, d, fam).get.columns.toSet
       val delFam =
-        if (cols("doc_id")) famDocsDeleted
-        else if (cols("vec_id") || cols("nid")) famVecsDeleted
+        if (cols("doc_id")) Docs.delFam
+        else if (cols("vec_id") || cols("nid")) Vecs.delFam
         else "" // non-id-keyed (hot-shingle cap): a set, dedup only
       val idCol =
         if (cols("doc_id")) "doc_id" else if (cols("vec_id")) "vec_id" else "nid"
@@ -2513,18 +2470,12 @@ object LlmPipeline extends QueryPack {
     // which the folded tombstone does not shadow), while an id that
     // lived only in the overlay is physically gone now, so its
     // tombstone folds away and the id is novel again
-    val tombFolds = Seq(
-      (famDocsDeleted, delDoc, "doc_id"),
-      (famVecsDeleted, delVec, "vec_id")).flatMap {
-      case (fam, del, idCol) => del.map { ids =>
-        // "corpus-stored" means the CURRENT generation's snapshot when
-        // one exists (a promoted id's base row is in the snapshot, not
-        // the source parquet)
-        val corpusIds =
-          if (idCol == "doc_id") corpusDocs(s, d).select(col(idCol))
-          else corpusVecs(s, d).select(col(idCol))
-        fam -> ids.join(corpusIds, Seq(idCol), "left_semi")
-      }
+    val tombFolds = dels.map { case (dom, ids) =>
+      // "corpus-stored" means the CURRENT generation's snapshot when one
+      // exists (a promoted id's base row is in the snapshot, not the
+      // source parquet)
+      dom.delFam -> ids.join(dom.corpus(s, d).select(col(dom.idCol)),
+        Seq(dom.idCol), "left_semi")
     }
     val tombOut = IndexOverlay.appendAll(s, d, tombFolds)
     val out = dataOut ++ tombOut
@@ -2556,7 +2507,7 @@ object LlmPipeline extends QueryPack {
     *
     * FROZEN-GEOMETRY flavor (the documented pick): per index family the
     * promoted artifact is EXACTLY the standing corpus-side view the
-    * probes read (the std* readers) — rows are moved, never re-derived,
+    * probes read ([[standing]]) — rows are moved, never re-derived,
     * so promotion is PROBE-INVARIANT by the same construction as
     * [[ingestCompact]]'s fold; hyperplanes, centroids, codebooks and
     * the persisted-N bit dial keep reading gen-0 artifacts, and
@@ -2570,7 +2521,7 @@ object LlmPipeline extends QueryPack {
     * family's fold — a commit made under an older geometry dial left
     * its derived rows in stranded families which stopped being read —
     * is re-derived from the snapshot under the CURRENT geometry via the
-    * commit recipes ([[commitDocFamilies]]/[[commitVecFamilies]]) and
+    * commit recipes ([[IndexDomain.derive]]) and
     * unioned into the promoted artifact, so previously-vanished
     * committed docs rejoin every probe. On a well-formed store the heal
     * sets are empty and promotion is a pure fold.
@@ -2593,12 +2544,11 @@ object LlmPipeline extends QueryPack {
     * CommitBench. Returns one row per promoted object: (family,
     * kind∈table|artifact, n_rows). */
   private[graft] def ingestPromote(s: SparkSession, d: String,
-      retainMillis: Long = 0L,
-      nbuckets: Int = CorpusGen.DEFAULT_BUCKETS): DataFrame = {
+      retainMillis: Long = 0L): DataFrame = {
     var attempts = 0
     var out: Option[DataFrame] = None
     while (out.isEmpty) {
-      out = ingestPromoteOnce(s, d, retainMillis, nbuckets)
+      out = ingestPromoteOnce(s, d, retainMillis)
       attempts += 1
       if (out.isEmpty && attempts >= 8) throw new IllegalStateException(
         s"promote of '$d' lost $attempts consecutive races against " +
@@ -2613,9 +2563,6 @@ object LlmPipeline extends QueryPack {
     * not retired by the flip. Production value is a no-op. */
   private[graft] var promoteEntryHook: String => Unit = _ => ()
 
-  /** One promote attempt: Some(report) on success / clean no-op, None
-    * when a racing commit was detected after the flip (the caller
-    * re-folds under a watermark that includes it). */
   /** One per-family fold unit: the folded standing view, its heal id
     * column (None = self-completing), the physical id column (empty =
     * SET-shaped, written whole), the previous generation's bucket refs
@@ -2625,11 +2572,13 @@ object LlmPipeline extends QueryPack {
     healCol: Option[String], idCol: String,
     carried: Seq[CorpusGen.BRef], partial: Boolean)
 
+  /** One promote attempt: Some(report) on success / clean no-op, None
+    * when a racing commit was detected after the flip (the caller
+    * re-folds under a watermark that includes it). */
   private def ingestPromoteOnce(s: SparkSession, d: String,
-      retainMillis: Long, nbuckets: Int): Option[DataFrame] = {
+      retainMillis: Long): Option[DataFrame] = {
     import s.implicits._
-    val hasDocs = graft.sources.Store.exists(s"$d/documents.parquet")
-    val hasVecs = graft.sources.Store.exists(s"$d/embeddings.parquet")
+    val doms = domains.filter(_.hasTable(d))
     val wm = math.max(IndexOverlay.maxManifestId(d), CorpusGen.watermark(d))
     if (wm == CorpusGen.watermark(d))
       return Some(Seq.empty[(String, String, Long)].toDF("family", "kind", "n_rows"))
@@ -2637,15 +2586,12 @@ object LlmPipeline extends QueryPack {
     val t0 = System.nanoTime()
     // folded overlay volume, for the cadence stats below — raw-family
     // rows from the manifest chain (driver-side metadata, zero jobs)
-    val ovRowsIn = IndexOverlay.effectiveEntries(d)
-      .filter(e => e.family == famDocsRaw || e.family == famVecsRaw)
-      .map(_.rows).sum
+    val ovRowsIn = rawOverlayRows(d)
     val prev = CorpusGen.current(d)
     val nextId = prev.map(_.id + 1).getOrElse(1)
     // the bucket dial is fixed at the FIRST promotion — a row's bucket
     // must never move, or carried-forward refs would misplace it
-    val nb = prev.map(_.nbuckets).filter(_ > 0).getOrElse(nbuckets)
-    val nbits = if (hasVecs) lshcNbits(embCount(s, d)) else 0
+    val nb = prev.map(_.nbuckets).filter(_ > 0).getOrElse(CorpusGen.DEFAULT_BUCKETS)
     // plain numeric-id bucketing: engine-portable, stable forever, and
     // prunable at the PATH level (each bucket is its own dir)
     def bkt(c: Column): Column = pmod(c, lit(nb.toLong)).cast(IntegerType)
@@ -2654,51 +2600,55 @@ object LlmPipeline extends QueryPack {
     // overlay mentions — committed/replaced raw rows, tombstones — and
     // therefore every heal candidate (stranded ids are committed ids).
     // One tiny distinct over O(overlay) rows per domain; ≤ nb values.
-    def touchedOf(rawFam: String, delFam: String): Set[Int] = {
-      val parts = Seq(rawFam, delFam).flatMap(f => IndexOverlay.read(s, d, f)
+    val touched: Map[IndexDomain, Set[Int]] = doms.map { dom =>
+      val parts = Seq(dom.rawFam, dom.delFam).flatMap(f => IndexOverlay.read(s, d, f)
         .map(df => df.select(col(df.columns.head).cast(LongType).as("id"))))
-      parts.reduceOption(_ unionByName _) match {
+      dom -> (parts.reduceOption(_ unionByName _) match {
         case Some(u) => u.select(bkt(col("id")).as("b")).distinct()
           .collect().map(_.getInt(0)).toSet
-        case None => Set.empty
-      }
-    }
-    val touchedD = if (hasDocs) touchedOf(famDocsRaw, famDocsDeleted) else Set.empty[Int]
-    val touchedV = if (hasVecs) touchedOf(famVecsRaw, famVecsDeleted) else Set.empty[Int]
+        case None => Set.empty[Int]
+      })
+    }.toMap
 
     // fold plan per family: PARTIAL (prev-gen bucket refs pruned to the
     // touched set + untouched refs carried forward) when the previous
     // generation carries bucket refs for it; FULL otherwise (first
     // promote, legacy layout, or a family minted since — e.g. by a
     // retrain re-dial — where there is nothing to reference)
-    def fold(fam: String, touched: Set[Int], idCol: String,
-        healCol: Option[String], isDoc: Boolean,
-        full: => DataFrame): FamFold =
-      CorpusGen.artifactBuckets(s, d, fam, touched) match {
-        case Some(base) =>
-          val carried = prev.get.artB.getOrElse(fam, Nil)
-            .filterNot(r => touched.contains(r.bucket))
-          val view = if (isDoc) ovDoc(s, d, fam, base)
-            else ovVec(s, d, fam, base, idCol)
-          FamFold(fam, view, healCol, idCol, carried, partial = true)
-        case None => FamFold(fam, full, healCol, idCol, Nil, partial = false)
+    def fold(f: IndexFamily): FamFold = {
+      val fam = f.name(s, d)
+      f.idCol match {
+        case None => // SET-shaped: always whole
+          FamFold(fam, standing(s, d, f).distinct(), None, "", Nil, partial = false)
+        case Some(idCol) =>
+          val tch = touched(f.dom)
+          CorpusGen.artifactBuckets(s, d, fam, tch) match {
+            case Some(base) =>
+              val carried = prev.get.artB.getOrElse(fam, Nil)
+                .filterNot(r => tch.contains(r.bucket))
+              FamFold(fam, ovSeq(s, d, fam, base, idCol, f.dom.delFam),
+                f.idCol, idCol, carried, partial = true)
+            case None =>
+              FamFold(fam, standing(s, d, f), f.idCol, idCol, Nil, partial = false)
+          }
       }
+    }
 
     // rank-1 drift assignment: no overlay family of its own — base rows
     // carry over tomb-filtered (no rescoring), overlay members assign
     // fresh under the frozen centroids ([[driftMembers]]'s semantics,
     // partial-fold shape)
     def foldAssign1(): FamFold =
-      CorpusGen.artifactBuckets(s, d, famIvfkAssign1(d), touchedV) match {
+      CorpusGen.artifactBuckets(s, d, famIvfkAssign1(d), touched(Vecs)) match {
         case Some(baseAsg) =>
-          val base = minusDeleted(s, d, baseAsg, "vec_id", famVecsDeleted)
-          val view = overlayVisible(s, d, famVecsRaw, "vec_id", famVecsDeleted) match {
+          val base = minusDeleted(s, d, baseAsg, "vec_id", Vecs.delFam)
+          val view = overlayVisible(s, d, Vecs.rawFam, "vec_id", Vecs.delFam) match {
             case Some(ovRaw) => base.unionByName(ivfKCellsFor(
               ovRaw.select(col("vec_id"), col("embedding")), ivfKCentroids(s, d), 1))
             case None => base
           }
           val carried = prev.get.artB.getOrElse(famIvfkAssign1(d), Nil)
-            .filterNot(r => touchedV.contains(r.bucket))
+            .filterNot(r => touched(Vecs).contains(r.bucket))
           FamFold(famIvfkAssign1(d), view, None, "vec_id", carried, partial = true)
         case None => FamFold(famIvfkAssign1(d),
           driftMembers(s, d).select(col("vec_id"), col("cell")),
@@ -2706,54 +2656,23 @@ object LlmPipeline extends QueryPack {
       }
 
     // all fold views constructed under ONE pinned generation snapshot
-    // (base refs and chain watermark must agree — ADVICE r19)
-    val (docFolds, vecFolds, tblDoc, tblVec) = CorpusGen.pinned(d) {
-      val dFolds: Seq[FamFold] = if (!hasDocs) Nil else Seq(
-        fold(Curation.famDocHashes, touchedD, "doc_id", Some("doc_id"),
-          isDoc = true, stdDocHashes(s, d)),
-        FamFold(famHotShingles, stdHotShingles(s, d).distinct(),
-          None, "", Nil, partial = false), // SET-shaped: always whole
-        fold(famDocShingles, touchedD, "doc_id", Some("doc_id"),
-          isDoc = true, stdDocShingles(s, d)),
-        fold(famMinhashSigs, touchedD, "doc_id", Some("doc_id"),
-          isDoc = true, stdMinhashSigs(s, d)),
-        fold(famSubstrPostings, touchedD, "doc_id", Some("doc_id"),
-          isDoc = true, stdSubstrPostings(s, d)))
-      val vFolds: Seq[FamFold] = if (!hasVecs) Nil else Seq(
-        fold(famLshcOwn(d, nbits), touchedV, "vec_id", Some("vec_id"),
-          isDoc = false, stdLshcOwn(s, d, nbits)),
-        fold(famLshMulti, touchedV, "vec_id", Some("vec_id"),
-          isDoc = false, stdLshMulti(s, d)),
-        fold(famSemAssign(d), touchedV, "vec_id", Some("vec_id"),
-          isDoc = false, stdSemAssign(s, d)),
-        fold(famSemAssign2(d), touchedV, "vec_id", Some("vec_id"),
-          isDoc = false, stdSemAssign2(s, d)),
-        fold(famIvfkAssign2(d), touchedV, "vec_id", Some("vec_id"),
-          isDoc = false, stdIvfkAssign2(s, d)),
-        fold(famPqCodesWide(d), touchedV, "nid", Some("nid"),
-          isDoc = false, stdPqCodesWide(s, d)),
-        foldAssign1())
-      // snapshot-table folds: the standing view over the touched base
-      // buckets only (overlay ids all fall in touched buckets), plus the
-      // untouched refs carried forward
-      def tbl(name: String, idCol: String, rawFam: String,
-          fullView: => DataFrame, touched: Set[Int]): (DataFrame, Seq[CorpusGen.BRef], Boolean) =
-        CorpusGen.tableBuckets(s, d, name, touched) match {
+    // (base refs and chain watermark must agree — ADVICE r19); per domain:
+    // its family folds, then its snapshot-table fold — the standing view
+    // over the touched base buckets only (overlay ids all fall in touched
+    // buckets), plus the untouched refs carried forward
+    val plans = CorpusGen.pinned(d) {
+      doms.map { dom =>
+        val folds = dom.families.map(fold) ++
+          (if (dom eq Vecs) Seq(foldAssign1()) else Nil)
+        val tbl = CorpusGen.tableBuckets(s, d, dom.table, touched(dom)) match {
           case Some(base) =>
-            val carried = prev.get.tblB.getOrElse(name, Nil)
-              .filterNot(r => touched.contains(r.bucket))
-            val view = if (idCol == "doc_id") ovDoc(s, d, rawFam, base)
-              else ovVec(s, d, rawFam, base)
-            (view, carried, true)
-          case None => (fullView, Nil, false)
+            val carried = prev.get.tblB.getOrElse(dom.table, Nil)
+              .filterNot(r => touched(dom).contains(r.bucket))
+            (ovSeq(s, d, dom.rawFam, base, dom.idCol, dom.delFam), carried, true)
+          case None => (dom.visible(s, d), Nil, false)
         }
-      val tD = if (hasDocs)
-        Some(tbl("documents", "doc_id", famDocsRaw, visibleDocs(s, d), touchedD))
-      else None
-      val tV = if (hasVecs)
-        Some(tbl("embeddings", "vec_id", famVecsRaw, visibleVecs(s, d), touchedV))
-      else None
-      (dFolds, vFolds, tD, tV)
+        (dom, folds, tbl)
+      }
     }
 
     val genPath = CorpusGen.publish(d, nextId, wm, nb) { tmp =>
@@ -2848,17 +2767,10 @@ object LlmPipeline extends QueryPack {
         (touchedBack, all)
       }
 
-      if (hasDocs) {
-        val (snapT, snapA) =
-          writeTable("documents", "doc_id", touchedD.isEmpty, tblDoc.get)
-        writeFams(snapT, snapA, "doc_id", docFolds, touchedD.isEmpty,
-          commitDocFamilies(s, d, _))
-      }
-      if (hasVecs) {
-        val (snapT, snapA) =
-          writeTable("embeddings", "vec_id", touchedV.isEmpty, tblVec.get)
-        writeFams(snapT, snapA, "vec_id", vecFolds, touchedV.isEmpty,
-          commitVecFamilies(s, d, _))
+      plans.foreach { case (dom, folds, tbl) =>
+        val noTouch = touched(dom).isEmpty
+        val (snapT, snapA) = writeTable(dom.table, dom.idCol, noTouch, tbl)
+        writeFams(snapT, snapA, dom.idCol, folds, noTouch, dom.deriveNamed(s, d, _))
       }
       (tables.toSeq, arts.toSeq, tbRefs.toSeq, abRefs.toSeq)
     }
@@ -2895,6 +2807,13 @@ object LlmPipeline extends QueryPack {
       .toDF("family", "kind", "n_rows"))
   }
 
+  /** Standing overlay rows of the raw families, from the manifest chain
+    * (driver-side metadata, zero jobs). */
+  private def rawOverlayRows(d: String): Long = {
+    val raw = domains.map(_.rawFam).toSet
+    IndexOverlay.effectiveEntries(d).filter(e => raw(e.family)).map(_.rows).sum
+  }
+
   /** Promote-cadence observability ([[graft.Ingest.promoteReport]],
     * VERDICT r19 task 6): ONE row of the dials the promote decision
     * needs, all driver-side metadata (chain + gen meta + the stats file
@@ -2913,17 +2832,11 @@ object LlmPipeline extends QueryPack {
   private[graft] def ingestPromoteReport(s: SparkSession, d: String,
       maxOverlayRatio: Double): DataFrame = {
     import s.implicits._
-    val hasDocs = graft.sources.Store.exists(s"$d/documents.parquet")
-    val hasVecs = graft.sources.Store.exists(s"$d/embeddings.parquet")
-    val ovRows = IndexOverlay.effectiveEntries(d)
-      .filter(e => e.family == famDocsRaw || e.family == famVecsRaw)
-      .map(_.rows).sum
+    val ovRows = rawOverlayRows(d)
     val nManifests = IndexOverlay.effectiveEntriesSeq(d).map(_._1).distinct.size
     val gen = CorpusGen.current(d)
-    val corpusRows =
-      gen.map(_.tableRows.values.sum).getOrElse(
-        (if (hasDocs) docCount(s, d) else 0L) +
-          (if (hasVecs) embCount(s, d) else 0L))
+    val corpusRows = gen.map(_.tableRows.values.sum).getOrElse(
+      domains.filter(_.hasTable(d)).map(_.count(s, d)).sum)
     val ratio =
       if (corpusRows == 0L) (if (ovRows > 0L) Double.PositiveInfinity else 0.0)
       else ovRows.toDouble / corpusRows
@@ -2977,15 +2890,14 @@ object LlmPipeline extends QueryPack {
   private[graft] def ingestRetrain(s: SparkSession, d: String,
       retainMillis: Long = 0L): DataFrame = {
     import s.implicits._
-    require(graft.sources.Store.exists(s"$d/embeddings.parquet"),
+    require(Vecs.hasTable(d),
       s"retrain re-dials VECTOR geometry and '$d' has no embeddings table")
     ingestPromote(s, d, retainMillis)
     val gen = CorpusGen.current(d)
     val standingN = gen.flatMap(_.tableRows.get("embeddings"))
       .getOrElse(embCount(s, d))
     val standingDocs = gen.flatMap(_.tableRows.get("documents")).getOrElse(
-      if (graft.sources.Store.exists(s"$d/documents.parquet")) docCount(s, d)
-      else 0L)
+      if (Docs.hasTable(d)) docCount(s, d) else 0L)
     val next = GeomEpoch.Ep(GeomEpoch.epoch(d) + 1, standingN, standingDocs,
       gen.map(_.id).getOrElse(0))
     // a crashed retrain's partial artifacts trained on an OLDER snapshot:
@@ -3021,17 +2933,6 @@ object LlmPipeline extends QueryPack {
       .toDF("family", "kind", "n_rows")
   }
 
-  /** Lifecycle-aware index drift ([[graft.Ingest.driftReport]]):
-    * q_index_drift's frozen-centroid residual computed over
-    * base ∪ COMMITTED − deleted vectors. The registered query measures
-    * the BASE corpus only (correct for the oracle gate — registered
-    * plans must never see the overlay), but committed batches are
-    * exactly the new-distribution data that should drive a rebuild
-    * (VERDICT r17): off-distribution commits flip cells stale HERE
-    * while the registered query stays green. Committed members take
-    * their rank-1 cell fresh under the frozen centroids — bit-identical
-    * to what [[ivfKAssign]] would have assigned them — at O(committed·k)
-    * cost; the base side reads the persisted assignment artifact. */
   /** Frozen-centroid residual over an arbitrary member set
     * (cell, embedding): per trained-k cell, how far one more Lloyd step
     * would move the frozen centroid given these members (drift =
@@ -3082,11 +2983,11 @@ object LlmPipeline extends QueryPack {
   private def driftMembers(s: SparkSession, d: String): DataFrame = CorpusGen.pinned(d) {
     val cents = ivfKCentroids(s, d)
     val base = minusDeleted(s, d,
-      corpusVecs(s, d)
-        .join(genArtVec(s, d, famIvfkAssign1(d))(ivfKAssign(s, d)), "vec_id")
+      Vecs.corpus(s, d)
+        .join(genArt(s, d, famIvfkAssign1(d), "vec_id", Vecs)(ivfKAssign(s, d)), "vec_id")
         .select(col("vec_id"), col("cell"), col("embedding")),
-      "vec_id", famVecsDeleted)
-    overlayVisible(s, d, famVecsRaw, "vec_id", famVecsDeleted) match {
+      "vec_id", Vecs.delFam)
+    overlayVisible(s, d, Vecs.rawFam, "vec_id", Vecs.delFam) match {
       case Some(ovRaw) =>
         val o = ovRaw.select(col("vec_id"), col("embedding"))
         base.unionByName(o.join(ivfKCellsFor(o, cents, 1), "vec_id")
@@ -3095,6 +2996,17 @@ object LlmPipeline extends QueryPack {
     }
   }
 
+  /** Lifecycle-aware index drift ([[graft.Ingest.driftReport]]):
+    * q_index_drift's frozen-centroid residual computed over
+    * base ∪ COMMITTED − deleted vectors. The registered query measures
+    * the BASE corpus only (correct for the oracle gate — registered
+    * plans must never see the overlay), but committed batches are
+    * exactly the new-distribution data that should drive a rebuild
+    * (VERDICT r17): off-distribution commits flip cells stale HERE
+    * while the registered query stays green. Committed members take
+    * their rank-1 cell fresh under the frozen centroids — bit-identical
+    * to what [[ivfKAssign]] would have assigned them — at O(committed·k)
+    * cost; the base side reads the persisted assignment artifact. */
   private[graft] def ingestDriftReport(s: SparkSession, d: String): DataFrame =
     ivfDriftFrom(ivfKCentroids(s, d),
       driftMembers(s, d).select(col("cell"), col("embedding")))
@@ -3133,12 +3045,12 @@ object LlmPipeline extends QueryPack {
       lit(DRIFT_TAU).as("threshold"),
       col("stale"))
     val frozen = lshcNbits(embCount(s, d))
-    val nVis = visibleVecs(s, d).count()
+    val nVis = Vecs.visible(s, d).count()
     val occ = nVis.toDouble / (1L << frozen)
     val lshc = Seq(("lshc_occupancy", s"nbits=$frozen", nVis, occ,
         2.0 * LSHC_CELL, occ > 2.0 * LSHC_CELL))
       .toDF("tier", "key", "n_members", "metric", "threshold", "stale")
-    val sizes = stdSemAssign(s, d).groupBy("cell").agg(count(lit(1)).as("sz"))
+    val sizes = standing(s, d, SemAssign).groupBy("cell").agg(count(lit(1)).as("sz"))
     val bucket = when(col("sz") <= SEM_CELL, "(0,c]")
       .when(col("sz") <= 2 * SEM_CELL, "(c,2c]")
       .when(col("sz") <= 4 * SEM_CELL, "(2c,4c]")

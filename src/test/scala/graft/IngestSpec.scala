@@ -1905,4 +1905,23 @@ class IngestSpec extends AnyFunSuite {
     assert(jobs.forall(_._1 == "ingest-jobgroup-test"),
       s"jobs outside the caller's group: ${jobs.filter(_._1 != "ingest-jobgroup-test")}")
   }
+
+  test("one commitDocs and one commitVectors write every live overlay family but the two tombstones") {
+    import spark.implicits._
+    val d = freshCorpus("lvf")
+    // 60 docs sharing one 3-shingle (batch-hot and novel to the corpus
+    // cap, so the hot-shingle family has rows too), each long enough for
+    // a substring window
+    val docs = Ingest.commitDocs(spark, d, (1 to 60).map(i =>
+      (7000L + i, s"zzqa zzqb zzqc " + (0 until 8).map(j => s"u${i}x$j").mkString(" ")))
+      .toDF("doc_id", "text")).collect()
+    val vecs = Ingest.commitVectors(spark, d,
+      vecRows(2000L, 4, seed = 17L).toDF("vec_id", "embedding")).collect()
+    val committed = (docs ++ vecs).map(_.getString(0)).toSet
+    assert((docs ++ vecs).forall(_.getLong(2) > 0L), "a reported segment has no rows")
+    val live = Ingest.overlayReport(spark, d).where(col("live")).collect()
+      .map(_.getString(0)).toSet
+    assert(committed.size == 13 && committed == live -- Set("docs_deleted", "vecs_deleted"),
+      s"committed ${committed.toSeq.sorted} vs live ${live.toSeq.sorted}")
+  }
 }
